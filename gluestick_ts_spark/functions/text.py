@@ -49,6 +49,9 @@ __all__ = [
     "repetition_profile_sql",
     "gopher_quality_flags",
     "gopher_rules_sql",
+    "gopher_lines_sql",
+    "gopher_grams_sql",
+    "tokens_sql",
     "gopher_rules_duck_sql",
     "gopher_cjk_toks_sql",
     "gopher_cjk_toks_duck_sql",
@@ -177,6 +180,40 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+# ---------------------------------------------------------------------
+# Staging contract for the per-document rules below.
+#
+# The higher-order functions (``filter``, ``aggregate``, ``zip_with``,
+# ``transform``) are ``CodegenFallback`` in Spark 4.1: they evaluate on
+# the interpreted path, where whole-stage codegen's subexpression
+# elimination cannot reach their arguments. A rule that filters an
+# inline ``split(lower(trim(text)), '\\s+')`` therefore re-tokenizes
+# the document once per rule, and once per reference inside a rule.
+# Code that evaluates several rules per row must stage the derived
+# arrays ONCE and pass them in:
+#
+# - ``toks_sql`` (``lang_score_sql``, ``lang_id_sql``,
+#   ``gopher_rules_sql``) / ``toks`` (``quality_score_expr``): the
+#   token array, ``tokens_sql`` of the text;
+# - ``lines_sql`` / ``grams_sql`` (``gopher_rules_sql``): the line
+#   array ``gopher_lines_sql`` and ``gopher_grams_sql`` of the tokens;
+# - ``lowered`` (``license_flags_expr``): ``lower`` of the text.
+#
+# Staged columns are Project layers: select the array under its own
+# name in a lower ``select`` and reference it by name (SPARK-36718:
+# Catalyst keeps a non-cheap projection that is referenced more than
+# once un-inlined, so it is computed once per row). Let-bindings
+# (``_let``, ``transform(array(x), ...)[0]``) are NOT staged columns:
+# they wrap the reader in one more interpreted lambda, which measured
+# slower for the quality score (see ``quality_score_expr``).
+# ---------------------------------------------------------------------
+
+
+def tokens_sql(col: str) -> str:
+    """Spark-SQL form of :func:`tokens_expr` over the named column —
+    the one tokenizer the staged rules share."""
+    return f"split(lower(trim(`{col}`)), '\\\\s+')"
+
 
 def _let(value, fn):
     """Let-bind ``value`` through a single-element-array ``transform``
@@ -217,7 +254,7 @@ def stopword_ratio_expr(text: Column | str, stopwords: tuple[str, ...] = STOPWOR
 
 
 def quality_score_expr(
-    text: Column | str, cjk: Column | None = None
+    text: Column | str, cjk: Column | None = None, toks: Column | None = None
 ) -> Column:
     """Composite [0,1] quality heuristic: rewards mid-length docs and
     a sane stopword ratio, penalizes punctuation soup. The exact
@@ -232,7 +269,13 @@ def quality_score_expr(
     unsegmented prose is one whitespace token, so the word-grain score
     pins every real CJK document at the length floor with a zero
     stopword term (a structural fail, not a quality signal). The
-    punctuation term is char-based already and stays shared."""
+    punctuation term is char-based already and stays shared.
+
+    ``toks`` optionally substitutes a STAGED token array (the staging
+    contract above) for the re-split text: ``tokens_expr(text)`` on
+    rows where ``cjk`` is false or absent, ``cjk_char_tokens_expr(text)``
+    where it holds — the routed array gopher's ``toks_sql`` takes when
+    routed by the same predicate."""
     # Round 16 (optimization): LEFT IN THE r15 FORM on purpose. Two
     # let-binding variants were interleaved-A/B'd (8 matched rounds
     # each) and both measured flat-to-worse: binding the word-path
@@ -241,34 +284,32 @@ def quality_score_expr(
     # curation 7.14 -> 8.92 s); binding only the CJK path was a wash
     # against this form (curation 7.29 vs 7.52 s means). Unlike the
     # shingle fold — whose duplicates sit INSIDE a CodegenFallback
-    # argument tree where codegen CSE cannot reach — these duplicates
-    # are project-level, and whole-stage codegen already eliminates
-    # them.
+    # argument tree where codegen CSE cannot reach — the size()
+    # duplicates are project-level, and whole-stage codegen already
+    # eliminates them. The copy under the stopword ``filter`` is not:
+    # callers that stage the token array pass it as ``toks``.
     punct = punct_ratio_expr(text)
     punct_term = F.lit(0.2) * (
         F.lit(1.0) - F.least(punct * F.lit(10.0), F.lit(1.0))
     )
-    words = word_count_expr(text).cast("double")
-    stop = stopword_ratio_expr(text)
-    word_score = (
-        F.lit(0.4) * F.least(words / F.lit(100.0), F.lit(1.0))
-        + F.lit(0.4) * F.least(stop * F.lit(5.0), F.lit(1.0))
-        + punct_term
-    )
+
+    def score(tk: Column, stopwords: tuple[str, ...]) -> Column:
+        sw = F.array(*[F.lit(s) for s in stopwords])
+        n = F.size(tk)
+        stop = F.size(F.filter(tk, lambda t: F.array_contains(sw, t))).cast(
+            "double"
+        ) / F.greatest(n, F.lit(1)).cast("double")
+        return (
+            F.lit(0.4) * F.least(n.cast("double") / F.lit(100.0), F.lit(1.0))
+            + F.lit(0.4) * F.least(stop * F.lit(5.0), F.lit(1.0))
+            + punct_term
+        )
+
+    word_score = score(tokens_expr(text) if toks is None else toks, STOPWORDS_EN)
     if cjk is None:
         return word_score
-    ctoks = cjk_char_tokens_expr(text)
-    sw = F.array(*[F.lit(c) for c in CJK_STOP_CHARS])
-    cstop = F.size(
-        F.filter(ctoks, lambda t: F.array_contains(sw, t))
-    ).cast("double") / F.greatest(F.size(ctoks), F.lit(1)).cast("double")
-    cjk_score = (
-        F.lit(0.4)
-        * F.least(F.size(ctoks).cast("double") / F.lit(100.0), F.lit(1.0))
-        + F.lit(0.4) * F.least(cstop * F.lit(5.0), F.lit(1.0))
-        + punct_term
-    )
-    return F.when(cjk, cjk_score).otherwise(word_score)
+    ctoks = cjk_char_tokens_expr(text) if toks is None else toks
+    return F.when(cjk, score(ctoks, CJK_STOP_CHARS)).otherwise(word_score)
 
 
 def token_count_expr(text: Column | str, pattern: str = TOKEN_REGEX) -> Column:
@@ -561,18 +602,21 @@ def lang_id_expr(
     ).otherwise(word_pred)
 
 
-def lang_score_sql(col: str, lang: str) -> str:
+def lang_score_sql(col: str, lang: str, toks_sql: str | None = None) -> str:
     """Spark-SQL fragment computing ``lang_score_expr`` for a named
     column — semantics identical; exists so multi-language queries can
     enter the plan as parsed SQL (one parser call) instead of ~50 py4j
-    Column constructions per language (see gopher_rules_sql rationale)."""
+    Column constructions per language (see gopher_rules_sql rationale).
+
+    ``toks_sql`` optionally names the STAGED ``tokens_sql(col)`` array
+    (the staging contract above); the CJK script scores ignore it."""
     if lang in CJK_LANGS:
         return (
             f"CAST(regexp_count(`{col}`, '[{_SCRIPT_CLASS[lang]}]') AS DOUBLE)"
             f" / CAST(greatest(length(regexp_replace(`{col}`, "
             "'\\\\s', '')), 1) AS DOUBLE)"
         )
-    toks = f"split(lower(trim(`{col}`)), '\\\\s+')"
+    toks = toks_sql or tokens_sql(col)
     mk = "array(" + ", ".join(f"'{m}'" for m in LANG_MARKERS[lang]) + ")"
     return (
         f"CAST(size(filter({toks}, t -> array_contains({mk}, t))) AS DOUBLE)"
@@ -610,21 +654,33 @@ def _cjk_route_sqls(col_expr: str, dialect: str) -> tuple[str, str]:
     return is_cjk, routed
 
 
-def lang_id_sql(col: str, langs: tuple[str, ...] = DEFAULT_LANGS) -> str:
+def lang_id_sql(
+    col: str, langs: tuple[str, ...] = DEFAULT_LANGS, toks_sql: str | None = None
+) -> str:
     """Spark-SQL fragment computing ``lang_id_expr`` for a named column
     (script-routed CJK first, then argmax marker score via
     lexicographic struct max, ties to earlier language, 'und' when all
-    scores are zero)."""
+    scores are zero). ``toks_sql``: the staged token array, as in
+    :func:`lang_score_sql`.
+
+    The word path is ONE ``array_max`` over the candidates plus the
+    sentinel ``(0.0, 1, 'und')``: its prio 1 outranks every candidate
+    (prio <= 0) on a zero score, and any positive score outranks it —
+    exactly "'und' when every score is zero" without re-deriving the
+    max inside a CASE. A null text scores null everywhere, which sorts
+    below the sentinel's 0.0, so it reads 'und' as before."""
     word_langs = [l for l in langs if l not in CJK_LANGS]
     cjk_langs = [l for l in langs if l in CJK_LANGS]
     if word_langs:
         cands = ", ".join(
-            f"named_struct('score', {lang_score_sql(col, lang)}, "
+            f"named_struct('score', {lang_score_sql(col, lang, toks_sql)}, "
             f"'prio', {-i}, 'lang', '{lang}')"
             for i, lang in enumerate(word_langs)
         )
-        best = f"array_max(array({cands}))"
-        word = f"CASE WHEN {best}.score > 0.0D THEN {best}.lang ELSE 'und' END"
+        word = (
+            f"array_max(array({cands}, "
+            "named_struct('score', 0.0D, 'prio', 1, 'lang', 'und'))).lang"
+        )
     else:
         # CJK-only request: the word path is the literal 'und'
         # (lang_id_expr's behavior) — array_max(array()) fails analysis
@@ -1194,6 +1250,36 @@ def gopher_cjk_toks_duck_sql(text_sql: str = "text") -> str:
     )
 
 
+def gopher_lines_sql(text_col: str = "text") -> str:
+    """Spark-SQL fragment: the line array the Gopher line rules read —
+    stage it once and pass it to ``gopher_rules_sql`` as ``lines_sql``."""
+    return f"split(`{text_col}`, '\\n')"
+
+
+def gopher_grams_sql(toks: str) -> str:
+    """Spark-SQL fragment: the word-3-gram list of the token array
+    ``toks`` that Gopher's repetition rule reads — stage it once
+    and pass it to ``gopher_rules_sql`` as ``grams_sql``. A zip_with
+    over shifted slices. Documents with fewer than 3 tokens have NO
+    3-grams: the slice floors would otherwise yield one partial
+    pseudo-gram (e.g. 'a b' for a 2-token doc) and score repetition
+    over fake data — such docs get an empty list and repetition_ok
+    passes vacuously (n_words_ok rejects them anyway)."""
+    g2 = (
+        f"zip_with({toks}, slice({toks}, 2, greatest(size({toks}) - 1, 1)), "
+        "(a, b) -> concat_ws(' ', a, b))"
+    )
+    g3 = (
+        f"zip_with({g2}, slice({toks}, 3, greatest(size({toks}) - 2, 1)), "
+        "(a, b) -> concat_ws(' ', a, b))"
+    )
+    return (
+        f"CASE WHEN size({toks}) >= 3 "
+        f"THEN slice({g3}, 1, size({toks}) - 2) "
+        "ELSE array() END"
+    )
+
+
 def gopher_rules_sql(
     text_col: str = "text",
     min_words: int = 50,
@@ -1224,7 +1310,8 @@ def gopher_rules_sql(
     precomputed column reference for the derived arrays — callers that
     project the token/gram/line arrays ONCE in a lower select (Catalyst
     keeps non-cheap multi-referenced projections un-inlined) avoid
-    re-deriving them per rule.
+    re-deriving them per rule (``tokens_sql``, ``gopher_lines_sql`` and
+    ``gopher_grams_sql`` are the fragments to stage).
 
     ``cjk_sql`` (round 13): a doc-level boolean SQL fragment routing
     the THREE word-shape rules to their char-grain CJK variants —
@@ -1253,34 +1340,12 @@ def gopher_rules_sql(
     inflate a soup doc over the floor. Vacuous TRUE for unrouted docs
     and when ``seg_toks_sql`` is None (requires ``cjk_sql``)."""
     t = f"`{text_col}`"
-    toks = toks_sql or f"split(lower(trim({t})), '\\\\s+')"
+    toks = toks_sql or tokens_sql(text_col)
     nw = f"CAST(size({toks}) AS DOUBLE)"
     safe_w = f"greatest({nw}, 1.0D)"
-    lines = lines_sql or f"split({t}, '\\n')"
+    lines = lines_sql or gopher_lines_sql(text_col)
     safe_l = f"CAST(greatest(size({lines}), 1) AS DOUBLE)"
-    if grams_sql is None:
-        # word-3-gram list, zip_with over shifted slices — arrays
-        # evaluated once per row. Documents with fewer than 3 tokens
-        # have NO 3-grams: the slice floors would otherwise yield one
-        # partial pseudo-gram (e.g. 'a b' for a 2-token doc) and score
-        # repetition over fake data — such docs get an empty list and
-        # repetition_ok passes vacuously (n_words_ok rejects them
-        # anyway).
-        g2 = (
-            f"zip_with({toks}, slice({toks}, 2, greatest(size({toks}) - 1, 1)), "
-            "(a, b) -> concat_ws(' ', a, b))"
-        )
-        g3 = (
-            f"zip_with({g2}, slice({toks}, 3, greatest(size({toks}) - 2, 1)), "
-            "(a, b) -> concat_ws(' ', a, b))"
-        )
-        grams = (
-            f"CASE WHEN size({toks}) >= 3 "
-            f"THEN slice({g3}, 1, size({toks}) - 2) "
-            "ELSE array() END"
-        )
-    else:
-        grams = grams_sql
+    grams = grams_sql or gopher_grams_sql(toks)
     sw = "array(" + ", ".join(f"'{w}'" for w in STOPWORDS_EN) + ")"
     mwl_min = (
         f"(CASE WHEN ({cjk_sql}) THEN 1.0D ELSE {min_mean_word_len}D END)"
@@ -1700,6 +1765,7 @@ _LICENSE_NAMES = (
     ("mpl", r"\bmozilla\s+public\s+licen[cs]e\b|\bmpl[- ]2\.0\b"),
     ("public-domain", r"\bpublic\s+domain\b|\bcc0\b|\bunlicen[cs]e\b"),
 )
+_LICENSE_ANY_RE = "|".join(f"(?:{pat})" for _, pat in _LICENSE_NAMES)
 _COPYRIGHT_RE = r"(?i)(©|\(c\)\s*(19|20)\d{2}|\bcopyright\b\s*(©|\(c\))?\s*(19|20)\d{2})"
 _RIGHTS_RE = r"(?i)\ball\s+rights\s+reserved\b"
 
@@ -1861,7 +1927,9 @@ def blocked_terms_sql(
     }
 
 
-def license_flags_expr(text: Column | str) -> Column:
+def license_flags_expr(
+    text: Column | str, lowered: Column | None = None
+) -> Column:
     """License/copyright screening flags — the corpus-curation stage
     that gates redistribution-sensitive documents (the code-corpus
     permissive-license screen and the web-corpus notice filter), as
@@ -1886,12 +1954,19 @@ def license_flags_expr(text: Column | str) -> Column:
     map-only at any scale. A KEYWORD screen, not an SPDX parser:
     mentions of a license in prose flag too — the right bias for a
     curation gate, where false positives route to review and false
-    negatives leak restricted text into training."""
+    negatives leak restricted text into training.
+
+    ``lowered`` optionally substitutes the STAGED ``lower(text)`` (the
+    staging contract above). The ten family regexes sit behind ONE
+    alternation prefilter: a document that matches none of them — most
+    of a corpus — costs one regex scan instead of ten, and the priority
+    chain only runs on documents known to match a family."""
     raw = F.col(text) if isinstance(text, str) else text
-    t = F.lower(raw)
+    t = F.lower(raw) if lowered is None else lowered
     name = F.lit(None).cast("string")
     for canon, pat in reversed(_LICENSE_NAMES):
         name = F.when(t.rlike(pat), F.lit(canon)).otherwise(name)
+    name = F.when(t.rlike(_LICENSE_ANY_RE), name)
     hc = raw.rlike(_COPYRIGHT_RE)
     rr = raw.rlike(_RIGHTS_RE)
     return F.struct(

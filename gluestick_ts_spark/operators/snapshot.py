@@ -23,8 +23,9 @@ Spark-first design decisions (SURVEY §7 hard parts 1-2):
   scanning. Writes land in a temp dir and are atomically swapped in.
 - **Scale**: the merge is a single shuffle on the PK; no driver
   collects. At 100 TB the snapshot would be bucketed by PK so the merge
-  shuffle only moves the (small) incoming batch; ``repartition`` before
-  write keeps file sizes sane either way.
+  shuffle only moves the (small) incoming batch. ``_atomic_write`` does
+  not repartition: it writes one file per partition of the frame it is
+  handed (after a merge, the AQE-coalesced PK shuffle's partitions).
 """
 
 from __future__ import annotations

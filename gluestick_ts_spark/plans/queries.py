@@ -41,6 +41,8 @@ from ..functions.text import (
     fingerprint_sql,
     gopher_cjk_toks_duck_sql,
     gopher_cjk_toks_sql,
+    gopher_grams_sql,
+    gopher_lines_sql,
     gopher_quality_flags,
     gopher_rules_duck_sql,
     gopher_rules_sql,
@@ -56,6 +58,7 @@ from ..functions.text import (
     shingles_expr,
     stopwords_for_lang_sql,
     tokens_expr,
+    tokens_sql,
     winnow_fingerprints_expr,
     winnow_fps_sql,
 )
@@ -125,12 +128,13 @@ def _bg_submit(fn, *args, **kwargs):
 
     Round 17: width is GATED on ``defaultParallelism`` instead of the
     r16 ``max_workers=2`` local[32] constant (the r16 verdict's own
-    recorded TODO): ``min(4, max(2, dp // 8))`` — 2 at <=16 cores
-    (matching the measured r16 optimum under contention), 3 at 32 (so
-    three independent eager sub-builds can be in flight where the
-    dependency graph has three — curation's rank/lp/per spine), capped
-    at 4 per guide §2.6 ("2-3 jobs in flight is plenty"). Sized once at
-    first use from the active session."""
+    recorded TODO): ``min(4, max(2, dp // 8))`` — 2 below 24 cores
+    (matching the measured r16 optimum under contention; a 4-core box
+    gets 2), 3 at 24 (so three independent eager sub-builds can be in
+    flight where the dependency graph has three — curation's
+    rank/lp/per spine), and 4 from 32 on, the cap per guide §2.6
+    ("2-3 jobs in flight is plenty"). Sized once at first use from the
+    active session."""
     global _BG_POOL
     if _BG_POOL is None:
         from concurrent.futures import ThreadPoolExecutor
@@ -1599,7 +1603,7 @@ _JT_CJK_SQL = "`__jt_lang` IN (" + ", ".join(f"'{l}'" for l in CJK_LANGS) + ")"
 _JT_CJK_DUCK = "JLANG IN (" + ", ".join(f"'{l}'" for l in CJK_LANGS) + ")"
 _JT_RT_SQL = (
     f"CASE WHEN {_JT_CJK_SQL} THEN {gopher_cjk_toks_sql('__jt_text')} "
-    "ELSE split(lower(trim(`__jt_text`)), '\\\\s+') END"
+    "ELSE `__jt_wt` END"
 )
 _JT_RT_DUCK = (
     f"CASE WHEN {_JT_CJK_DUCK} THEN {gopher_cjk_toks_duck_sql('JT')} "
@@ -1607,7 +1611,8 @@ _JT_RT_DUCK = (
 )
 _JT_GOPHER_ROUTED_SQL = " AND ".join(
     gopher_rules_sql(
-        "__jt_text", toks_sql="__rt", cjk_sql=_JT_CJK_SQL
+        "__jt_text", toks_sql="__rt", lines_sql="__jt_lines",
+        grams_sql="__jt_gg", cjk_sql=_JT_CJK_SQL,
     ).values()
 )
 _JT_GOPHER_ROUTED_DUCK = " AND ".join(
@@ -1622,10 +1627,13 @@ _JT_GOPHER_ROUTED_DUCK = " AND ".join(
 # stream and batch defaults agree again)
 _CUR_RT_SQL = (
     f"CASE WHEN {_JT_CJK_SQL} THEN {gopher_cjk_toks_sql('text')} "
-    "ELSE split(lower(trim(`text`)), '\\\\s+') END"
+    f"ELSE {tokens_sql('text')} END"
 )
 _CUR_GOPHER_ROUTED_SQL = " AND ".join(
-    gopher_rules_sql("text", toks_sql="__rt", cjk_sql=_JT_CJK_SQL).values()
+    gopher_rules_sql(
+        "text", toks_sql="__rt", lines_sql="__lines", grams_sql="__gg",
+        cjk_sql=_JT_CJK_SQL,
+    ).values()
 )
 _CUR_RT_DUCK = (
     f"CASE WHEN {_JT_CJK_DUCK.replace('JLANG', 'jlang')} "
@@ -1723,6 +1731,12 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
     from ..operators.dedup import _spread
 
     parts = set(parts)
+    # the routed gopher verdict's 3-gram and line arrays, staged one
+    # layer above `__rt` (functions/text.py staging contract)
+    _jt_gopher_staged = [
+        F.expr(gopher_grams_sql("__rt")).alias("__jt_gg"),
+        F.expr(gopher_lines_sql("__jt_text")).alias("__jt_lines"),
+    ]
     # round 16 (optimization): the whole leg is map-only expression CPU
     # (0 exchanges), so its parallelism IS the scan's split count — and
     # the sf test corpus is ONE small single-row-group parquet file,
@@ -1740,7 +1754,13 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         lv = d.select("doc_id", _ts_text_expr().alias("__jt_text"))
         lv = lv.select(
             "doc_id", "__jt_text",
-            F.expr(lang_id_sql("__jt_text")).alias("__jt_lang"),
+            F.expr(tokens_sql("__jt_text")).alias("__jt_wt"),
+        )
+        lv = lv.select(
+            "doc_id", "__jt_text", "__jt_wt",
+            F.expr(lang_id_sql("__jt_text", toks_sql="__jt_wt")).alias(
+                "__jt_lang"
+            ),
         )
         lv = lv.select(
             "doc_id", "__jt_text", "__jt_lang",
@@ -1763,7 +1783,7 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         )
         lv = lv.select(
             "doc_id", "__jt_lang", "__jt_text", "__rt", "__seg",
-            st.alias("__jt_st"),
+            st.alias("__jt_st"), *_jt_gopher_staged,
         )
         lv = lv.select(
             "doc_id",
@@ -1772,10 +1792,13 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
             "__rt",
             "__seg",
             "__jt_st",
+            "__jt_gg",
+            "__jt_lines",
             F.transform(F.col("__jt_st"), lambda s: s["cls"]).alias("__jt_cls"),
         )
         lv = lv.select(
             "doc_id", "__jt_lang", "__jt_text", "__rt", "__seg", "__jt_st",
+            "__jt_gg", "__jt_lines",
             _jt_context(F.col("__jt_cls")).alias("__jt_fin"),
         )
         return lv.select(
@@ -1805,8 +1828,16 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         # twin, its predicted language, and the routed stoplist array
         # are each projected ONCE in lower selects (lang runs per doc,
         # never per word; the SPARK-36718 staging rationale)
+        # the word tokens are staged once for lang-ID's four word
+        # languages and the routed array's non-CJK branch
         d = d.select("doc_id", "text", _ts_text_expr().alias("__jt_text"))
-        d = d.select("*", F.expr(lang_id_sql("__jt_text")).alias("__jt_lang"))
+        d = d.select("*", F.expr(tokens_sql("__jt_text")).alias("__jt_wt"))
+        d = d.select(
+            "*",
+            F.expr(lang_id_sql("__jt_text", toks_sql="__jt_wt")).alias(
+                "__jt_lang"
+            ),
+        )
         d = d.select(
             "*",
             stopwords_for_lang_expr(F.col("__jt_lang")).alias("__jt_sw"),
@@ -1821,7 +1852,8 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         "doc_id",
         "text",
         *(["__jt_lang", "__jt_text", "__rt", "__seg"] if jt else []),
-        F.expr("split(lower(trim(text)), '\\\\s+')").alias("__toks"),
+        *(_jt_gopher_staged if jt else []),
+        F.expr(tokens_sql("text")).alias("__toks"),
         # jusText block structs projected ONCE (strip chain + anchor
         # extract + stopword filter are the expensive part — the
         # same SPARK-36718 staging the token array rides).
@@ -1859,7 +1891,12 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         "doc_id",
         "text",
         "__toks",
-        *(["__jt_st", "__jt_lang", "__jt_text", "__rt", "__seg"] if jt else []),
+        *(
+            ["__jt_st", "__jt_lang", "__jt_text", "__rt", "__seg", "__jt_gg",
+             "__jt_lines"]
+            if jt
+            else []
+        ),
         F.expr(f"slice({g3}, 1, greatest(size(__toks) - 2, 1))").alias("__grams"),
         F.expr("split(text, '\\n')").alias("__lines"),
         *(
@@ -1878,7 +1915,12 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         "__toks",
         "__grams",
         "__lines",
-        *(["__jt_st", "__jt_lang", "__jt_text", "__rt", "__seg"] if jt else []),
+        *(
+            ["__jt_st", "__jt_lang", "__jt_text", "__rt", "__seg", "__jt_gg",
+             "__jt_lines"]
+            if jt
+            else []
+        ),
         *([_jt_context(F.col("__jt_cls")).alias("__jt_fin")] if jt else []),
         F.expr(
             "CASE WHEN size(__toks) >= 3 THEN __grams ELSE array() END"
@@ -2008,14 +2050,22 @@ def q_lang_scores(spark, sf, parts=("lang", "clf")):
     # lang_pred and the CJK script-fraction scores are non-trivially
     # exercised; the classifier below keeps reading the raw corpus
     # text (its oracle restates training — don't grow it).
+    # The word tokens are staged once as `__lt_toks` for the four word
+    # scores and lang_pred's four candidates (functions/text.py staging
+    # contract).
     d = d.select("*", _jt_text_expr().alias("__lt"))
+    d = d.select("*", F.expr(tokens_sql("__lt")).alias("__lt_toks"))
     sel = [F.col("doc_id")]
     if "lang" in parts:
         sel += [
-            F.expr(lang_score_sql("__lt", lang)).alias(f"score_{lang}")
+            F.expr(lang_score_sql("__lt", lang, "__lt_toks")).alias(
+                f"score_{lang}"
+            )
             for lang in DEFAULT_LANGS
         ]
-        sel.append(F.expr(lang_id_sql("__lt")).alias("lang_pred"))
+        sel.append(
+            F.expr(lang_id_sql("__lt", toks_sql="__lt_toks")).alias("lang_pred")
+        )
         # round 13: the blocked-terms content gate rides here for
         # driver visibility — a deterministic 2-term policy list drawn
         # from the synth vocabulary (one whole-token term + one
@@ -2078,7 +2128,19 @@ def q_lang_scores(spark, sf, parts=("lang", "clf")):
     # half the feature-build cost.
     from ..operators.classifier import logreg_score_micro_from_features
 
-    gopher = " AND ".join(gopher_rules_sql("text").values())
+    # the bootstrap label's token, line and 3-gram arrays are staged
+    # once for its eight rules (functions/text.py staging contract)
+    d = d.select(
+        "*",
+        F.expr(tokens_sql("text")).alias("__gt"),
+        F.expr(gopher_lines_sql("text")).alias("__gl"),
+    )
+    d = d.select("*", F.expr(gopher_grams_sql("__gt")).alias("__gg"))
+    gopher = " AND ".join(
+        gopher_rules_sql(
+            "text", toks_sql="__gt", lines_sql="__gl", grams_sql="__gg"
+        ).values()
+    )
     base = d.select(
         *sel,
         clf_features_expr("text", dim=32).alias("__x"),
@@ -2388,12 +2450,15 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
     # script — the planted real-script zh/ja/ko docs survive gopher
     # ONLY because routing applies the char-grain rules (unrouted they
     # are one giant pseudo-token: instant word-count fail). Staged as
-    # real columns (Project layers) so lang-ID runs once per doc and
-    # the routed token array is shared by all gopher rules
-    # (SPARK-36718).
+    # real columns (Project layers) so lang-ID runs once per doc on one
+    # staged token array, and the routed token array is shared by all
+    # gopher rules (SPARK-36718).
     d = (
         d.withColumn("text", _cur_text_expr())
-        .withColumn("__jt_lang", F.expr(lang_id_sql("text")))
+        .withColumn("__lt_toks", F.expr(tokens_sql("text")))
+        .withColumn(
+            "__jt_lang", F.expr(lang_id_sql("text", toks_sql="__lt_toks"))
+        )
     )
     # round 16 (optimization): the staged corpus (planted text synth +
     # lang-ID, ~1.5 s/pass at sf0.1 per the bench parts) is read by
@@ -2430,14 +2495,28 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
     _footer = F.lit("")
     for _m, _s in reversed(_LIC_FOOTERS):
         _footer = F.when(F.col("doc_id") % 20 == _m, F.lit(_s)).otherwise(_footer)
-    _lic = license_flags_expr(F.concat(F.col("text"), _footer))
+    _lic_text = F.concat(F.col("text"), _footer)
+
+    def _stage_rules(df):
+        """The Project layer under the per-doc rules: gopher's 3-gram
+        and line arrays and the lowered license text, each derived once
+        per row (functions/text.py staging contract)."""
+        return df.select(
+            "*",
+            F.expr(gopher_grams_sql("__rt")).alias("__gg"),
+            F.expr(gopher_lines_sql("text")).alias("__lines"),
+            F.lower(_lic_text).alias("__lic_low"),
+        )
+
+    _lic = license_flags_expr(_lic_text, lowered=F.col("__lic_low"))
     _lic_ok = _lic.getField("license_ok")  # the ONE gate rule (text.py)
+    _quality = quality_score_expr("text", cjk=_cjk_pred, toks=F.col("__rt"))
     if stages is not None:
         # single-stage marginal-cost builders (bench attribution only;
         # the ann_ivf mode-restricted precedent)
         (stage,) = stages
         if stage == "license":
-            return d.select(
+            return _stage_rules(d).select(
                 "doc_id",
                 _lic.getField("has_copyright").alias("has_copyright"),
                 _lic.getField("rights_reserved").alias("rights_reserved"),
@@ -2451,21 +2530,18 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
                 "dup_ok", F.row_number().over(w) == 1
             ).drop("__fp")
         if stage == "gopher":
-            return d.select(
+            return _stage_rules(d).select(
                 "doc_id",
                 F.expr(_CUR_GOPHER_ROUTED_SQL).alias("gopher_ok"),
             )
         if stage == "quality":
             return d.select(
                 "doc_id",
-                (quality_score_expr("text", cjk=_cjk_pred) >= 0.5).alias(
-                    "quality_ok"
-                ),
+                (_quality >= 0.5).alias("quality_ok"),
             )
         if stage == "adaptive":
             per = d.select(
-                "doc_id", "lang",
-                quality_score_expr("text", cjk=_cjk_pred).alias("__q"),
+                "doc_id", "lang", _quality.alias("__q"),
             )
             per = adaptive_quality_filter(
                 per, "__q", "lang", q=0.25, cut_col="__cut", keep_col="adaptive_ok"
@@ -2591,21 +2667,23 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
     # (construction + the url/domain/dup windows + the thin-flag
     # checkpoint + the adaptive cut) reads only the pinned staged
     # corpus — independent of the contamination leg until the final
-    # join. With the pool now 3 wide at this core count it builds on
-    # its own worker beside rank and lp, so its ~1 s checkpoint job
-    # AND its py4j construction overlap the contamination leg's ~1 s
-    # of pure expression building on the main thread (guide §2.6; the
-    # r16 §22 attempt pooled contam instead and measured a wash —
-    # because the 2-wide pool just serialized it behind lp).
+    # join. It builds on the pool beside rank and lp, so its ~1 s
+    # checkpoint job AND its py4j construction overlap the
+    # contamination leg's ~1 s of pure expression building on the main
+    # thread (guide §2.6). The pool (_bg_submit) is 3 wide at 24 cores
+    # and 4 from 32; below 24 cores it is 2 wide and per waits for
+    # rank's or lp's worker. The r16 §22 attempt pooled contam instead
+    # and measured a wash, because the 2-wide pool serialized it
+    # behind lp.
     def _build_per():
-        per = d.select(
+        per = _stage_rules(d).select(
             "doc_id",
             "lang",
             F.col("__jt_lang").alias("doc_lang"),
             url.alias("__url"),
             (F.col("doc_id") % 20 == 0).alias("is_benchmark"),
             F.expr(_CUR_GOPHER_ROUTED_SQL).alias("gopher_ok"),
-            quality_score_expr("text", cjk=_cjk_pred).alias("__q"),
+            _quality.alias("__q"),
             fingerprint_expr("text").alias("__fp"),
             _lic.alias("__lic"),
         )
@@ -3433,13 +3511,12 @@ def q_ngram_jaccard_adjacent(spark, sf):
     # no reuse (guide §2.3 shuffle fewer bytes). r16 reverted this on
     # sf0.1 wall-clock (the corpus fits one task; exchange bytes are
     # invisible); the 10x tiled fixture flips the verdict — see
-    # OPTIMIZATION_r17.md for the interleaved numbers. The joined
-    # shingle pair is staged through ONE struct (lambda parameters
-    # materialize) so each side tokenizes once per pair even though
-    # intersect+union both read it (project-level duplicates are
-    # folded by whole-stage codegen's subexpression elimination — the
-    # r16 §25 refined rule — so the post-join shingle subtrees
-    # evaluate once per pair side).
+    # OPTIMIZATION_r17.md for the interleaved numbers. Nothing is
+    # staged here: `sa`/`sb` and the intersect are plain project-level
+    # subtrees that the intersect and the union both read, and
+    # whole-stage codegen's subexpression elimination folds the
+    # duplicates (the r16 §25 refined rule), so each side's shingles
+    # and the intersect evaluate once per pair.
     _sh3 = shingles_expr(F.col("text"), 3)
     a = d.select(F.col("doc_id").alias("id_a"), F.col("text").alias("ta"))
     b = d.select(F.col("doc_id").alias("id_b"), F.col("text").alias("tb"))

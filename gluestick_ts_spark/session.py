@@ -14,6 +14,9 @@ Design notes (scale-first):
 - ``spark.sql.shuffle.partitions`` defaults to the local core count here;
   on a real cluster this is overridden by AQE coalescing anyway
   (``spark.sql.adaptive.coalescePartitions.enabled``).
+- ANSI mode pinned on: it is Spark 4.1's default, written out so cast
+  and overflow semantics (errors, not silent NULLs; ``size(NULL)`` is
+  NULL) do not rest on the engine default.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ __all__ = ["get_spark", "DEFAULT_CONFIG"]
 
 DEFAULT_CONFIG: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
+    "spark.sql.ansi.enabled": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

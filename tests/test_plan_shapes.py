@@ -819,3 +819,55 @@ def test_video_band_joins_never_cross_join(spark, sf_dir):
         keyed = [a for a in _exchange_args(plan) if "hashpartitioning" in a]
         assert all("content" not in a for a in keyed), keyed
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+_TOKENIZER = re.compile(r"split\(lower\(trim\((\w+)#\d+")
+
+
+def _tokenized_sources(plan: str) -> dict:
+    """Tokenizer occurrences per source column in an optimized plan."""
+    from collections import Counter
+
+    return Counter(_TOKENIZER.findall(plan))
+
+
+def test_text_rules_tokenize_each_staged_source_once(spark, sf_dir, monkeypatch):
+    """The per-document text rules read STAGED token arrays
+    (functions/text.py staging contract): in the optimized plans of
+    curation's staging and per-document projections (both run as eager
+    checkpoints at construction, so they are captured there), of
+    lang_scores' language columns and of text_stats, the tokenizer
+    ``split(lower(trim(x)), '\\s+')`` appears once per source column,
+    not once per rule."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from gluestick_ts_spark.plans.queries import q_lang_scores
+
+    plans = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    QUERIES["curation_pipeline_docs"](spark, sf_dir)
+    monkeypatch.undo()
+    staging = [p for p in plans if re.search(r"AS __jt_lang#", p)]
+    per = [p for p in plans if re.search(r"AS gopher_ok#", p)]
+    assert len(staging) == 1 and len(per) == 1, len(plans)
+    assert _tokenized_sources(staging[0]) == {"text": 1}
+    assert _tokenized_sources(per[0]) == {"text": 1}
+    # the prefilter and the ten license-family regexes read the one
+    # staged lowered text
+    assert per[0].count("lower(concat(") == 1
+    assert per[0].count("AS __lic_low#") == 1
+    assert per[0].count("RLIKE(__lic_low#") >= 11
+
+    lang = q_lang_scores(spark, sf_dir, parts=("lang",))
+    got = _tokenized_sources(lang._jdf.queryExecution().optimizedPlan().toString())
+    assert got["__lt"] == 1 and max(got.values()) == 1, got
+
+    ts = QUERIES["text_stats"](spark, sf_dir)
+    got = _tokenized_sources(ts._jdf.queryExecution().optimizedPlan().toString())
+    assert got == {"text": 1, "__jt_text": 1}, got

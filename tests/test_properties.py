@@ -5,12 +5,14 @@ PK uniqueness, last-write-wins)."""
 from __future__ import annotations
 
 import os
+import re
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from gluestick_ts_spark.catalog import json_schema_to_struct_type
+from gluestick_ts_spark.functions.text import LANG_MARKERS, STOPWORDS_EN
 from gluestick_ts_spark.functions.templating import format_str_safely
 from gluestick_ts_spark.operators.snapshot import snapshot_records
 from gluestick_ts_spark.sinks.singer import spark_type_to_singer_schema, to_singer_schema
@@ -447,3 +449,66 @@ def test_psl_registered_domain_invariants(data) -> None:
         assert reg.endswith("." + suffix) or suffix.startswith("x.")
         if reg.endswith("." + suffix):
             assert reg.count(".") == suffix.count(".") + 1
+
+
+# -- staged text rules over random token soups ------------------------------
+
+_soup_words = sorted(
+    {w for ws in LANG_MARKERS.values() for w in ws} | set(STOPWORDS_EN)
+) + ["zzz", "The", "LA", "..."]
+_soup = st.lists(
+    st.tuples(
+        st.sampled_from(_soup_words), st.sampled_from([" ", "  ", "\t", "\n"])
+    ),
+    max_size=14,
+).map(lambda ps: "".join(w + sep for w, sep in ps))
+
+
+def _py_lang_id(text: str) -> str:
+    """Pure-Python restatement of the word-path lang-ID contract:
+    argmax marker overlap over the space-segmented languages in
+    declaration order, earlier language on ties, 'und' at zero."""
+    toks = re.split(r"\s+", text.strip().lower())
+    best = (0.0, 1, "und")
+    for i, lang in enumerate(LANG_MARKERS):
+        hits = sum(t in LANG_MARKERS[lang] for t in toks)
+        best = max(best, (hits / max(len(toks), 1), -i, lang))
+    return best[2]
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(_soup, min_size=1, max_size=24))
+def test_staged_text_rules_on_token_soups(spark, texts) -> None:
+    """On random soups of marker words and stopwords, the staged
+    renderings (one token array per row) equal the inline-derived ones
+    for lang-ID, every language score and the quality score — and
+    lang-ID equals a pure-Python restatement."""
+    from pyspark.sql import functions as F
+
+    from gluestick_ts_spark.functions.text import (
+        DEFAULT_LANGS,
+        lang_id_sql,
+        lang_score_sql,
+        quality_score_expr,
+        tokens_sql,
+    )
+
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
+    df = df.select("id", "t", F.expr(tokens_sql("t")).alias("tk"))
+    pairs = {
+        "lang": (lang_id_sql("t"), lang_id_sql("t", toks_sql="tk")),
+        **{
+            f"score_{l}": (lang_score_sql("t", l), lang_score_sql("t", l, "tk"))
+            for l in DEFAULT_LANGS
+        },
+    }
+    cols = [F.expr(u).alias(f"u_{k}") for k, (u, _) in pairs.items()]
+    cols += [F.expr(s).alias(f"s_{k}") for k, (_, s) in pairs.items()]
+    cols += [
+        quality_score_expr("t").alias("u_q"),
+        quality_score_expr("t", toks=F.col("tk")).alias("s_q"),
+    ]
+    for r in df.select("id", *cols).collect():
+        for k in [*pairs, "q"]:
+            assert r[f"u_{k}"] == r[f"s_{k}"], (texts[r.id], k)
+        assert r["s_lang"] == _py_lang_id(texts[r.id]), texts[r.id]

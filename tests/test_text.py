@@ -1895,3 +1895,205 @@ def test_cjk_dict_tokens_join_larger_lexicon(spark):
     assert joined == fold
     # the dictionary actually segmented doc 1 into words, not chars
     assert all(len(t) >= 2 for t in fold[1]) and len(fold[1]) == 20
+
+
+# -- staged renderings (the staging contract in functions/text.py) ----------
+
+# edge texts every staged rule is checked on: null, empty and
+# whitespace-only text, a leading tab/newline, all-zero and tied marker
+# scores, and the three CJK-routed scripts
+_STAGED_EDGE_TEXTS = [
+    None,
+    "",
+    "   ",
+    "\tthe cat and the dog",
+    "\nder hund ist nicht da",
+    "zzz qqq xxx",                   # every word score zero -> 'und'
+    "the der",                       # en/de tie -> earlier (en) wins
+    "la que",                        # fr/es tie -> fr
+    "le chat est dans la maison et la",
+    "el perro y la casa es que",
+    _ZH,
+    _JA,
+    _KO,
+    "한국어와 english mixed 텍스트",
+]
+
+
+def _staged_df(spark, texts):
+    """(id, t) plus the Project-layer staged arrays the rules take:
+    word tokens `tk` and their 3-grams `gw`, lines `ln`, the routed
+    tokens `rt` and their 3-grams `gg` (the curation staging)."""
+    from gluestick_ts_spark.functions.text import (
+        _cjk_route_sqls,
+        gopher_cjk_toks_sql,
+        gopher_grams_sql,
+        gopher_lines_sql,
+        tokens_sql,
+    )
+
+    is_cjk, _ = _cjk_route_sqls("`t`", "spark")
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
+    df = df.select(
+        "id", "t",
+        F.expr(tokens_sql("t")).alias("tk"),
+        F.expr(gopher_lines_sql("t")).alias("ln"),
+        F.expr(f"coalesce({is_cjk}, false)").alias("cjk"),
+    )
+    df = df.select(
+        "*",
+        F.expr(
+            f"CASE WHEN cjk THEN {gopher_cjk_toks_sql('t')} ELSE tk END"
+        ).alias("rt"),
+    )
+    return df.select(
+        "*",
+        F.expr(gopher_grams_sql("tk")).alias("gw"),
+        F.expr(gopher_grams_sql("rt")).alias("gg"),
+    )
+
+
+def test_staged_lang_rules_match_unstaged(spark):
+    """lang_score_sql / lang_id_sql over a staged token array equal
+    their unstaged form and the Column twin lang_id_expr (the pre-
+    sentinel argmax + CASE rendering) on every edge text, for the
+    default languages and for word-only, CJK-only and mixed subsets."""
+    from gluestick_ts_spark.functions.text import (
+        DEFAULT_LANGS,
+        lang_id_sql,
+        lang_score_sql,
+    )
+
+    df = _staged_df(spark, _STAGED_EDGE_TEXTS)
+    cols = []
+    for lang in DEFAULT_LANGS:
+        cols += [
+            F.expr(lang_score_sql("t", lang)).alias(f"u_{lang}"),
+            F.expr(lang_score_sql("t", lang, "tk")).alias(f"s_{lang}"),
+        ]
+    subsets = [DEFAULT_LANGS, ("en", "de"), ("zh", "ja", "ko"), ("fr", "zh")]
+    for i, langs in enumerate(subsets):
+        cols += [
+            lang_id_expr("t", langs).alias(f"e{i}"),
+            F.expr(lang_id_sql("t", langs)).alias(f"u{i}"),
+            F.expr(lang_id_sql("t", langs, toks_sql="tk")).alias(f"s{i}"),
+        ]
+    rows = df.select("id", *cols).collect()
+    for r in rows:
+        for lang in DEFAULT_LANGS:
+            assert r[f"u_{lang}"] == r[f"s_{lang}"], (r.id, lang)
+        for i in range(len(subsets)):
+            assert r[f"e{i}"] == r[f"u{i}"] == r[f"s{i}"], (r.id, i)
+    got = {r.id: r.s0 for r in rows}
+    assert got[0] == got[1] == got[2] == got[5] == "und"
+    assert got[6] == "en" and got[7] == "fr"
+    assert (got[10], got[11], got[12]) == ("zh", "ja", "ko")
+
+
+def test_staged_license_flags_match_unstaged_and_oracle(spark):
+    """license_flags_expr with a staged lowered column equals the
+    unstaged form and the DuckDB twin (which has no prefilter) on one
+    text per license family, the copyright/rights marks, and null,
+    empty and whitespace text."""
+    duckdb = pytest.importorskip("duckdb")
+    from gluestick_ts_spark.functions.text import (
+        _LICENSE_NAMES,
+        license_flags_expr,
+        license_flags_sql,
+    )
+
+    family_texts = {
+        "cc-by": "shared under CC BY-SA 4.0 terms",
+        "creative-commons": "a Creative  Commons work",
+        "apache": "Licensed under the Apache License 2.0",
+        "mit": "Released under the MIT licence",
+        "agpl": "this is AGPL software",
+        "lgpl": "LGPL or commercial",
+        "gpl": "GNU Lesser Public License text",
+        "bsd": "the 3-clause BSD terms apply",
+        "mpl": "Mozilla Public License, MPL-2.0",
+        "public-domain": "The Unlicense, public domain",
+    }
+    assert set(family_texts) == {c for c, _ in _LICENSE_NAMES}
+    texts = list(family_texts.values()) + [
+        None, "", "  \t", "\nCopyright (c) 2020 Example Corp.",
+        "© 2021 Example. All rights reserved.", "nothing to see here",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
+    df = df.select("id", "t", F.lower("t").alias("lo"))
+    f = license_flags_expr("t").alias("u")
+    g = license_flags_expr("t", lowered=F.col("lo")).alias("s")
+    rows = df.select("id", f, g).collect()
+    got = {r.id: tuple(r.s) for r in rows}
+    assert got == {r.id: tuple(r.u) for r in rows}
+    names = {got[i][2] for i in range(len(family_texts))}
+    assert names == set(family_texts)
+    frag = license_flags_sql("t")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE x(id BIGINT, t VARCHAR)")
+    con.executemany("INSERT INTO x VALUES (?, ?)", list(enumerate(texts)))
+    want = {
+        r[0]: r[1:]
+        for r in con.execute(
+            f"SELECT id, {frag['has_copyright']}, {frag['rights_reserved']}, "
+            f"{frag['license_name']}, {frag['license_ok']} FROM x"
+        ).fetchall()
+    }
+    for i, w in want.items():
+        assert (got[i][0], got[i][1], got[i][2], got[i][4]) == w, texts[i]
+
+
+def test_staged_quality_matches_unstaged(spark):
+    """quality_score_expr over staged tokens (word tokens, or the
+    routed array under the CJK predicate) equals the re-splitting form
+    bit for bit."""
+    from gluestick_ts_spark.functions.text import is_cjk_doc_expr
+
+    df = _staged_df(spark, _STAGED_EDGE_TEXTS)
+    cjk = F.col("cjk")
+    rows = df.select(
+        "id",
+        quality_score_expr("t").alias("u"),
+        quality_score_expr("t", toks=F.col("tk")).alias("s"),
+        quality_score_expr("t", cjk=is_cjk_doc_expr("t")).alias("uc"),
+        quality_score_expr("t", cjk=cjk, toks=F.col("rt")).alias("sc"),
+    ).collect()
+    for r in rows:
+        assert r.u == r.s and r.uc == r.sc, r
+    routed = {r.id: r.sc != r.s for r in rows}
+    assert routed[10] and routed[11] and routed[12]
+
+
+def test_staged_gopher_rules_match_unstaged(spark):
+    """gopher_rules_sql over staged token, line and 3-gram arrays
+    equals the inline-derived form rule by rule, unrouted and
+    CJK-routed."""
+    from gluestick_ts_spark.functions.text import gopher_rules_sql
+
+    texts = _STAGED_EDGE_TEXTS + [
+        "- a\n- b\n- c ...\nfinal line…",
+        " ".join(["the cat sat on the mat"] * 12),
+    ]
+    df = _staged_df(spark, texts)
+    plain_u = gopher_rules_sql("t", min_words=3)
+    plain_s = gopher_rules_sql(
+        "t", min_words=3, toks_sql="tk", lines_sql="ln",
+        grams_sql="gw",
+    )
+    routed_u = gopher_rules_sql("t", min_words=3, toks_sql="rt", cjk_sql="cjk")
+    routed_s = gopher_rules_sql(
+        "t", min_words=3, toks_sql="rt", lines_sql="ln", grams_sql="gg",
+        cjk_sql="cjk",
+    )
+    cols = []
+    for k in plain_u:
+        cols += [
+            F.expr(plain_u[k]).alias(f"pu_{k}"),
+            F.expr(plain_s[k]).alias(f"ps_{k}"),
+            F.expr(routed_u[k]).alias(f"ru_{k}"),
+            F.expr(routed_s[k]).alias(f"rs_{k}"),
+        ]
+    for r in df.select("id", *cols).collect():
+        for k in plain_u:
+            assert r[f"pu_{k}"] == r[f"ps_{k}"], (r.id, k)
+            assert r[f"ru_{k}"] == r[f"rs_{k}"], (r.id, k)
