@@ -1765,7 +1765,6 @@ _LICENSE_NAMES = (
     ("mpl", r"\bmozilla\s+public\s+licen[cs]e\b|\bmpl[- ]2\.0\b"),
     ("public-domain", r"\bpublic\s+domain\b|\bcc0\b|\bunlicen[cs]e\b"),
 )
-_LICENSE_ANY_RE = "|".join(f"(?:{pat})" for _, pat in _LICENSE_NAMES)
 _COPYRIGHT_RE = r"(?i)(©|\(c\)\s*(19|20)\d{2}|\bcopyright\b\s*(©|\(c\))?\s*(19|20)\d{2})"
 _RIGHTS_RE = r"(?i)\ball\s+rights\s+reserved\b"
 
@@ -1957,16 +1956,12 @@ def license_flags_expr(
     negatives leak restricted text into training.
 
     ``lowered`` optionally substitutes the STAGED ``lower(text)`` (the
-    staging contract above). The ten family regexes sit behind ONE
-    alternation prefilter: a document that matches none of them — most
-    of a corpus — costs one regex scan instead of ten, and the priority
-    chain only runs on documents known to match a family."""
+    staging contract above)."""
     raw = F.col(text) if isinstance(text, str) else text
     t = F.lower(raw) if lowered is None else lowered
     name = F.lit(None).cast("string")
     for canon, pat in reversed(_LICENSE_NAMES):
         name = F.when(t.rlike(pat), F.lit(canon)).otherwise(name)
-    name = F.when(t.rlike(_LICENSE_ANY_RE), name)
     hc = raw.rlike(_COPYRIGHT_RE)
     rr = raw.rlike(_RIGHTS_RE)
     return F.struct(

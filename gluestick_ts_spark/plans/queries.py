@@ -1611,8 +1611,7 @@ _JT_RT_DUCK = (
 )
 _JT_GOPHER_ROUTED_SQL = " AND ".join(
     gopher_rules_sql(
-        "__jt_text", toks_sql="__rt", lines_sql="__jt_lines",
-        grams_sql="__jt_gg", cjk_sql=_JT_CJK_SQL,
+        "__jt_text", toks_sql="__rt", cjk_sql=_JT_CJK_SQL
     ).values()
 )
 _JT_GOPHER_ROUTED_DUCK = " AND ".join(
@@ -1731,12 +1730,6 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
     from ..operators.dedup import _spread
 
     parts = set(parts)
-    # the routed gopher verdict's 3-gram and line arrays, staged one
-    # layer above `__rt` (functions/text.py staging contract)
-    _jt_gopher_staged = [
-        F.expr(gopher_grams_sql("__rt")).alias("__jt_gg"),
-        F.expr(gopher_lines_sql("__jt_text")).alias("__jt_lines"),
-    ]
     # round 16 (optimization): the whole leg is map-only expression CPU
     # (0 exchanges), so its parallelism IS the scan's split count — and
     # the sf test corpus is ONE small single-row-group parquet file,
@@ -1783,7 +1776,7 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         )
         lv = lv.select(
             "doc_id", "__jt_lang", "__jt_text", "__rt", "__seg",
-            st.alias("__jt_st"), *_jt_gopher_staged,
+            st.alias("__jt_st"),
         )
         lv = lv.select(
             "doc_id",
@@ -1792,13 +1785,10 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
             "__rt",
             "__seg",
             "__jt_st",
-            "__jt_gg",
-            "__jt_lines",
             F.transform(F.col("__jt_st"), lambda s: s["cls"]).alias("__jt_cls"),
         )
         lv = lv.select(
             "doc_id", "__jt_lang", "__jt_text", "__rt", "__seg", "__jt_st",
-            "__jt_gg", "__jt_lines",
             _jt_context(F.col("__jt_cls")).alias("__jt_fin"),
         )
         return lv.select(
@@ -1852,7 +1842,6 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         "doc_id",
         "text",
         *(["__jt_lang", "__jt_text", "__rt", "__seg"] if jt else []),
-        *(_jt_gopher_staged if jt else []),
         F.expr(tokens_sql("text")).alias("__toks"),
         # jusText block structs projected ONCE (strip chain + anchor
         # extract + stopword filter are the expensive part — the
@@ -1891,12 +1880,7 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         "doc_id",
         "text",
         "__toks",
-        *(
-            ["__jt_st", "__jt_lang", "__jt_text", "__rt", "__seg", "__jt_gg",
-             "__jt_lines"]
-            if jt
-            else []
-        ),
+        *(["__jt_st", "__jt_lang", "__jt_text", "__rt", "__seg"] if jt else []),
         F.expr(f"slice({g3}, 1, greatest(size(__toks) - 2, 1))").alias("__grams"),
         F.expr("split(text, '\\n')").alias("__lines"),
         *(
@@ -1915,12 +1899,7 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         "__toks",
         "__grams",
         "__lines",
-        *(
-            ["__jt_st", "__jt_lang", "__jt_text", "__rt", "__seg", "__jt_gg",
-             "__jt_lines"]
-            if jt
-            else []
-        ),
+        *(["__jt_st", "__jt_lang", "__jt_text", "__rt", "__seg"] if jt else []),
         *([_jt_context(F.col("__jt_cls")).alias("__jt_fin")] if jt else []),
         F.expr(
             "CASE WHEN size(__toks) >= 3 THEN __grams ELSE array() END"
@@ -2128,19 +2107,7 @@ def q_lang_scores(spark, sf, parts=("lang", "clf")):
     # half the feature-build cost.
     from ..operators.classifier import logreg_score_micro_from_features
 
-    # the bootstrap label's token, line and 3-gram arrays are staged
-    # once for its eight rules (functions/text.py staging contract)
-    d = d.select(
-        "*",
-        F.expr(tokens_sql("text")).alias("__gt"),
-        F.expr(gopher_lines_sql("text")).alias("__gl"),
-    )
-    d = d.select("*", F.expr(gopher_grams_sql("__gt")).alias("__gg"))
-    gopher = " AND ".join(
-        gopher_rules_sql(
-            "text", toks_sql="__gt", lines_sql="__gl", grams_sql="__gg"
-        ).values()
-    )
+    gopher = " AND ".join(gopher_rules_sql("text").values())
     base = d.select(
         *sel,
         clf_features_expr("text", dim=32).alias("__x"),

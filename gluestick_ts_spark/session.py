@@ -17,6 +17,13 @@ Design notes (scale-first):
 - ANSI mode pinned on: it is Spark 4.1's default, written out so cast
   and overflow semantics (errors, not silent NULLs; ``size(NULL)`` is
   NULL) do not rest on the engine default.
+- Case mapping on the JVM (``spark.sql.icu.caseMappings.enabled=false``):
+  Spark 4.1's default routes ``lower``/``upper`` of non-ASCII text through
+  ICU, whose first use in a fresh JVM costs about 1.5 s of wall time on
+  4 cores, paid by the first text rule of every job. The JDK tables
+  (Unicode 13 on Java 17) map every code point the same way except the
+  67 letters added in Unicode 14-16 (e.g. Vithkuqi), which stay
+  unmapped. ``extra_conf`` switches ICU back on.
 """
 
 from __future__ import annotations
@@ -30,6 +37,7 @@ __all__ = ["get_spark", "DEFAULT_CONFIG"]
 DEFAULT_CONFIG: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "true",
+    "spark.sql.icu.caseMappings.enabled": "false",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

@@ -16,7 +16,8 @@ column), or, with ``quantile=True``, EQUAL-OCCUPANCY buckets cut at
 choice for skewed columns, where uniform buckets pile most rows into
 a few codes and the curve degenerates toward a single-column sort on
 the remaining dims). Bucket bits interleave into one long Z-key via
-in-row Column math; the write range-partitions AND sorts by the key,
+in-row Column math; the write range-partitions (at the key's own
+quantiles, so the boundaries are reproducible) AND sorts by the key,
 so both the file boundaries and the row groups inside each file cover
 tight Z-ranges. The payoff is measured, not assumed:
 ``file_stats_ranges`` reads the written footers (pyarrow) and reports
@@ -163,9 +164,12 @@ def write_zordered(
 ) -> dict[str, tuple[float, float] | list[float]]:
     """Write ``df`` as parquet clustered on the Z-order of ``cols``:
     per-column bucket boundaries (one bounded-collect aggregate),
-    in-row Z-key, ``repartitionByRange`` + ``sortWithinPartitions`` on
+    in-row Z-key, file boundaries at the key's quantiles (one more
+    sketch aggregate; ``num_files`` files, default
+    ``spark.sql.shuffle.partitions``) + ``sortWithinPartitions`` on
     the key, so per-file AND per-row-group statistics are tight on
-    every participating column.
+    every participating column, and the same input always lands on
+    the same file boundaries.
 
     ``quantile=True`` derives EQUAL-OCCUPANCY buckets from
     ``approx_percentile`` cut points instead of uniform min/max
@@ -216,12 +220,24 @@ def write_zordered(
             if lo is None or hi is None:
                 raise ValueError(f"write_zordered: column {c} is all-NULL")
             ranges[c] = {"uniform": [float(lo), float(hi)]}
-    key = zorder_key_expr(cols, ranges, bits)
-    out = df.withColumn("__z", key)
-    if num_files:
-        out = out.repartitionByRange(int(num_files), F.col("__z"))
-    else:
-        out = out.repartitionByRange(F.col("__z"))
+    out = df.withColumn("__z", zorder_key_expr(cols, ranges, bits))
+    n = int(num_files or df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # File boundaries are the Z-key's own quantiles, cut driver-side and
+    # routed with repartitionById — not repartitionByRange, whose
+    # sample seed derives from the RDD id, so the same write could land
+    # on different boundaries depending on what the session ran before.
+    # At 1e-5 rank error the sketch holds every key of a small input,
+    # so there the cuts are exact quantiles.
+    part = F.lit(0)
+    if n > 1:
+        probs = [k / n for k in range(1, n)]
+        cuts = out.agg(F.percentile_approx("__z", probs, 100_000)).first()[0]
+        if cuts:  # None on an empty input
+            arr = F.array(*[F.lit(int(x)).cast("long") for x in cuts])
+            part = F.aggregate(
+                arr, F.lit(0), lambda acc, cut: acc + (F.col("__z") > cut).cast("int")
+            )
+    out = out.repartitionById(n, part)
     out.sortWithinPartitions("__z").drop("__z").write.mode(mode).parquet(path)
     return ranges
 

@@ -20,3 +20,18 @@ def test_session_semantics_pinned(spark):
         "SELECT try_cast('x' AS INT) AS v, size(CAST(NULL AS ARRAY<STRING>)) AS n"
     ).first()
     assert row.v is None and row.n is None
+
+
+def test_case_mapping_on_the_jvm(spark):
+    """ICU case mapping is off on a ``get_spark`` session; ``lower`` of
+    accented, Greek, Cyrillic and dotted-capital text still maps as the
+    JDK's Unicode tables do."""
+    from gluestick_ts_spark.session import DEFAULT_CONFIG
+
+    assert DEFAULT_CONFIG["spark.sql.icu.caseMappings.enabled"] == "false"
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    row = spark.sql(
+        "SELECT lower('ÉCOLE Straße ΣΟΦΙΑ ПРИВЕТ İ') AS l, lower(NULL) AS n"
+    ).first()
+    assert row.l == "école straße σοφια привет i̇"
+    assert row.n is None

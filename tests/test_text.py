@@ -1992,9 +1992,8 @@ def test_staged_lang_rules_match_unstaged(spark):
 
 def test_staged_license_flags_match_unstaged_and_oracle(spark):
     """license_flags_expr with a staged lowered column equals the
-    unstaged form and the DuckDB twin (which has no prefilter) on one
-    text per license family, the copyright/rights marks, and null,
-    empty and whitespace text."""
+    unstaged form and the DuckDB twin on one text per license family,
+    the copyright/rights marks, and null, empty and whitespace text."""
     duckdb = pytest.importorskip("duckdb")
     from gluestick_ts_spark.functions.text import (
         _LICENSE_NAMES,
