@@ -189,8 +189,9 @@ def _col(c: Column | str) -> Column:
 # elimination cannot reach their arguments. A rule that filters an
 # inline ``split(lower(trim(text)), '\\s+')`` therefore re-tokenizes
 # the document once per rule, and once per reference inside a rule.
-# Code that evaluates several rules per row must stage the derived
-# arrays ONCE and pass them in:
+# Code that evaluates several rules per row can stage the derived
+# arrays ONCE and pass them in (curation does; on text_stats and
+# lang_scores it measured no gain, so they keep the inline forms):
 #
 # - ``toks_sql`` (``lang_score_sql``, ``lang_id_sql``,
 #   ``gopher_rules_sql``) / ``toks`` (``quality_score_expr``): the

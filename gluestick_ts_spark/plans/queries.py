@@ -1603,7 +1603,7 @@ _JT_CJK_SQL = "`__jt_lang` IN (" + ", ".join(f"'{l}'" for l in CJK_LANGS) + ")"
 _JT_CJK_DUCK = "JLANG IN (" + ", ".join(f"'{l}'" for l in CJK_LANGS) + ")"
 _JT_RT_SQL = (
     f"CASE WHEN {_JT_CJK_SQL} THEN {gopher_cjk_toks_sql('__jt_text')} "
-    "ELSE `__jt_wt` END"
+    "ELSE split(lower(trim(`__jt_text`)), '\\\\s+') END"
 )
 _JT_RT_DUCK = (
     f"CASE WHEN {_JT_CJK_DUCK} THEN {gopher_cjk_toks_duck_sql('JT')} "
@@ -1747,13 +1747,7 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         lv = d.select("doc_id", _ts_text_expr().alias("__jt_text"))
         lv = lv.select(
             "doc_id", "__jt_text",
-            F.expr(tokens_sql("__jt_text")).alias("__jt_wt"),
-        )
-        lv = lv.select(
-            "doc_id", "__jt_text", "__jt_wt",
-            F.expr(lang_id_sql("__jt_text", toks_sql="__jt_wt")).alias(
-                "__jt_lang"
-            ),
+            F.expr(lang_id_sql("__jt_text")).alias("__jt_lang"),
         )
         lv = lv.select(
             "doc_id", "__jt_text", "__jt_lang",
@@ -1818,16 +1812,8 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         # twin, its predicted language, and the routed stoplist array
         # are each projected ONCE in lower selects (lang runs per doc,
         # never per word; the SPARK-36718 staging rationale)
-        # the word tokens are staged once for lang-ID's four word
-        # languages and the routed array's non-CJK branch
         d = d.select("doc_id", "text", _ts_text_expr().alias("__jt_text"))
-        d = d.select("*", F.expr(tokens_sql("__jt_text")).alias("__jt_wt"))
-        d = d.select(
-            "*",
-            F.expr(lang_id_sql("__jt_text", toks_sql="__jt_wt")).alias(
-                "__jt_lang"
-            ),
-        )
+        d = d.select("*", F.expr(lang_id_sql("__jt_text")).alias("__jt_lang"))
         d = d.select(
             "*",
             stopwords_for_lang_expr(F.col("__jt_lang")).alias("__jt_sw"),
@@ -1842,7 +1828,7 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         "doc_id",
         "text",
         *(["__jt_lang", "__jt_text", "__rt", "__seg"] if jt else []),
-        F.expr(tokens_sql("text")).alias("__toks"),
+        F.expr("split(lower(trim(text)), '\\\\s+')").alias("__toks"),
         # jusText block structs projected ONCE (strip chain + anchor
         # extract + stopword filter are the expensive part — the
         # same SPARK-36718 staging the token array rides).
@@ -2029,22 +2015,14 @@ def q_lang_scores(spark, sf, parts=("lang", "clf")):
     # lang_pred and the CJK script-fraction scores are non-trivially
     # exercised; the classifier below keeps reading the raw corpus
     # text (its oracle restates training — don't grow it).
-    # The word tokens are staged once as `__lt_toks` for the four word
-    # scores and lang_pred's four candidates (functions/text.py staging
-    # contract).
     d = d.select("*", _jt_text_expr().alias("__lt"))
-    d = d.select("*", F.expr(tokens_sql("__lt")).alias("__lt_toks"))
     sel = [F.col("doc_id")]
     if "lang" in parts:
         sel += [
-            F.expr(lang_score_sql("__lt", lang, "__lt_toks")).alias(
-                f"score_{lang}"
-            )
+            F.expr(lang_score_sql("__lt", lang)).alias(f"score_{lang}")
             for lang in DEFAULT_LANGS
         ]
-        sel.append(
-            F.expr(lang_id_sql("__lt", toks_sql="__lt_toks")).alias("lang_pred")
-        )
+        sel.append(F.expr(lang_id_sql("__lt")).alias("lang_pred"))
         # round 13: the blocked-terms content gate rides here for
         # driver visibility — a deterministic 2-term policy list drawn
         # from the synth vocabulary (one whole-token term + one

@@ -835,13 +835,10 @@ def test_text_rules_tokenize_each_staged_source_once(spark, sf_dir, monkeypatch)
     """The per-document text rules read STAGED token arrays
     (functions/text.py staging contract): in the optimized plans of
     curation's staging and per-document projections (both run as eager
-    checkpoints at construction, so they are captured there), of
-    lang_scores' language columns and of text_stats, the tokenizer
-    ``split(lower(trim(x)), '\\s+')`` appears once per source column,
-    not once per rule."""
+    checkpoints at construction, so they are captured there), the
+    tokenizer ``split(lower(trim(x)), '\\s+')`` appears once per
+    source column, not once per rule."""
     from pyspark.sql.classic.dataframe import DataFrame
-
-    from gluestick_ts_spark.plans.queries import q_lang_scores
 
     plans = []
     checkpoint = DataFrame.localCheckpoint
@@ -862,11 +859,3 @@ def test_text_rules_tokenize_each_staged_source_once(spark, sf_dir, monkeypatch)
     assert per[0].count("lower(concat(") == 1
     assert per[0].count("AS __lic_low#") == 1
     assert per[0].count("RLIKE(__lic_low#") >= 10
-
-    lang = q_lang_scores(spark, sf_dir, parts=("lang",))
-    got = _tokenized_sources(lang._jdf.queryExecution().optimizedPlan().toString())
-    assert got["__lt"] == 1 and max(got.values()) == 1, got
-
-    ts = QUERIES["text_stats"](spark, sf_dir)
-    got = _tokenized_sources(ts._jdf.queryExecution().optimizedPlan().toString())
-    assert got == {"text": 1, "__jt_text": 1}, got

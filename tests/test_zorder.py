@@ -115,6 +115,32 @@ def test_zorder_append_with_frozen_layout_stays_tight(spark, tmp_path):
         write_zordered(mk(0), zpath, ["a", "b"], layout={"a": (0.0, 1.0)})
 
 
+def test_zorder_file_boundaries_do_not_depend_on_session_history(spark, tmp_path):
+    """The same input lands on the same files whatever the session ran
+    before the write (range-partition sampling seeded from the RDD id
+    did not), and an empty input writes without a boundary."""
+    df = spark.range(5000).select(
+        ((F.col("id") * 7919) % 1000).cast("double").alias("a"),
+        ((F.col("id") * 104729) % 1000).cast("double").alias("b"),
+    )
+    layouts = []
+    for i in range(3):
+        for _ in range(i):
+            spark.range(10).rdd.count()  # advances the RDD id
+        zpath = str(tmp_path / f"z{i}")
+        write_zordered(df, zpath, ["a", "b"], bits=8, num_files=4)
+        layouts.append(sorted(
+            tuple(sorted(s.items())) for s in file_stats_ranges(zpath, ["a", "b"])
+        ))
+    assert len(layouts[0]) == 4
+    assert layouts[0] == layouts[1] == layouts[2]
+    write_zordered(
+        df.where("a < 0"), str(tmp_path / "empty"), ["a", "b"],
+        num_files=4, layout={"a": (0.0, 1.0), "b": (0.0, 1.0)},
+    )
+    assert spark.read.parquet(str(tmp_path / "empty")).count() == 0
+
+
 def test_zorder_quantile_buckets_beat_uniform_on_skew(spark, tmp_path):
     """Skewed column: uniform buckets pile ~all rows into a few codes,
     so files covering the dense region stay wide on the OTHER dim too.
