@@ -1,285 +1,36 @@
-"""Benchmark harness: runs the headline queries at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+"""Headline suite: times the ``BENCH_QUERIES`` registry legs and prints
+ONE JSON line.
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Usage::
 
-Each query is executed to completion (count-style action materializing
-every row) but never collected to the driver.
+    SPARK_GRAFT_SF_DIR=<fixture dir> python bench.py
 
-The suite runs ``$SPARK_GRAFT_BENCH_RUNS`` (default 3) round-robin
-passes and reports the per-query MEDIAN — single-shot numbers on this
-box move ±25% run-to-run, which made per-round deltas unactionable.
-``queries`` holds the medians (and ``value`` their sum); the first
-pass's cold timings (planning + codegen included — comparable to the
-single-shot numbers benched in rounds 1-2) ride along under
-``queries_cold`` / ``cold_total``.
+Environment:
 
-DRIFT SENTINEL (round 10, the r9 verdict's process item):
-``q1_pricing_summary`` is re-timed single-shot at suite start AND end
-(after its own warm pass); the headline carries
-``sentinel.{start,end,mean,ratio}`` and ``queries_normalized``
-(median / sentinel mean — unitless, box-drift-cancelling). Cross-round
-comparison rule: compare ``queries_normalized`` first; a query whose
-NORMALIZED ratio moved >1.15x has a plan-level change worth
-attributing via ``parts``, while uniform movement of the RAW medians
-with a matching sentinel move is box noise. An intra-run
-``sentinel.ratio`` far from 1.0 means the box's load changed DURING
-the suite — treat that run's per-query numbers as low-confidence.
+- ``SPARK_GRAFT_SF_DIR``: fixture directory (default: the sf0.1
+  fixture); ``SPARK_GRAFT_CPUS`` sets ``local[N]`` through ``get_spark``.
+- ``SPARK_GRAFT_BENCH_RUNS`` (default 3) and
+  ``SPARK_GRAFT_BENCH_VOLATILE_EXTRA`` (default 2): every leg gets
+  runs + extra round-robin warm passes; ``queries`` holds the per-leg
+  medians and ``value`` their sum. The first pass's timings (planning
+  and codegen included) ride along as ``queries_cold`` / ``cold_total``.
+- ``SPARK_GRAFT_BENCH_WARC=0`` / ``SPARK_GRAFT_BENCH_GRAPH=0`` skip the
+  WARC-ingest and PageRank throughput legs;
+  ``SPARK_GRAFT_BENCH_SUB_RUNS`` (default 3) is their median-of-N.
 
-ROUND-10 DRIFT DATA: three same-tree quiet runs read warm totals
-75.9 / 94.4 / 85.3 s (geomean vs the r9 driver numbers 0.87 / 1.12 /
-0.97) with sentinel means 1.09 / 1.06 / 1.18 — i.e. the box's
-run-to-run spread is ±12% and NOT fully uniform (the sentinel
-normalizes uniform drift; heavy shuffle queries carry extra variance
-the small sentinel can't see). Median story: round 10 is at parity
-vs r9 despite multimodal_features gaining JPEG+GIF decode and
-curation_pipeline_docs the PSL eTLD+1 CASE (the only like-for-like
-composition growth, ~1.2x on that one row). The r7/r8 rule stands:
-treat cross-round deltas under ~1.25x as noise unless a plan diff
-corroborates.
+Each leg is built and written to the noop sink (every row materialized
+on the executors, nothing collected); a failing leg is recorded under
+``errors`` and the rest of the suite still runs.
 
-ROUND-12 COMPOSITION CHANGES: ``text_stats``'s justext part is now
-LANGUAGE-ROUTED — one lang-ID pass per doc (argmax over 5 marker
-lists, staged once) + an in-row stoplist when-chain replace the fixed
-EN list, and every 50th doc's content is a planted de/fr/zh twin (the
-routed-gate planted positive); expect a modest justext-part increase
-(lang-ID ≈ the lang_scores query's per-doc cost) — attribute via
-``parts.text_stats.justext``. ``multimodal_features`` gained the
-``vtrim`` leg (20 planted head-trimmed video twins through the
-even-ordinal vhash + the banded join — a fourth parts entry) and two
-metadata-probe slots in the feat leg (MP4 moov walk, MP3 frame scan —
-header-only, negligible); expect movement on that row to attribute to
-``parts.multimodal_features.vtrim``.
+Drift sentinel: ``q1_pricing_summary`` is timed at suite start and end.
+``queries_normalized`` divides each median by the sentinel mean, which
+cancels uniform box drift; compare normalized values across runs first,
+and treat a ``sentinel.ratio`` far from 1.0 as a run whose load changed
+mid-suite.
 
-ROUND-12 COMPOSITION CHANGE — lang_scores: the row now TRAINS the
-quality classifier at query construction (operators/classifier.py — 4
-full-batch gradient jobs) and emits ``clf_score``/``clf_prob``/
-``clf_keep``. Cost shape: ONE localCheckpoint pass builds lang
-columns + dim-32 feature arrays + the gopher bootstrap label
-together; training reads the cached arrays and the returned frame
-scores from the same cache (text scanned once, features built once) —
-measured ~4 s warm at sf0.1 vs r11's 0.77 s. Attribute via the new
-``parts.lang_scores`` map (``lang`` = the original columns alone,
-``clf`` = train + apply alone); the training jobs are composition,
-not regression — the lang part should hold at its r11 cost.
-
-ROUND-12 ADDITION — WARC INGEST LEG: the declared actual-100 TB grain
-(crawl containers in, extracted text out) finally has a throughput
-number. ``warc_ingest`` in BENCH_FULL.json times ``read_warc(
-emit_text=True, emit_payload=False)`` (the curation entry path: one
-task per container, HTTP split + charset decode + text projection,
-payload dropped at the scan) over a DETERMINISTIC synthesized fixture
-(~100 MB raw HTML across 16 per-record-gzip containers, built by our
-own ``warc_encode`` at bench setup — generation time reported
-separately, never timed), and ``write_wet`` of the extracted text
-(from a persisted frame, so the write leg times the SINK alone).
-Metrics: ``read_mb_s`` is on-disk container MB/s (the unit crawl
-dumps are priced in), ``read_records_s``, ``wet_mb_s`` on emitted
-bytes. The leg also carries the CDX sub-leg (round 12):
-``cdx_index_sec``/``cdx_index_records_s`` time ``index_warc`` over
-the same fixture (one linear header-parse pass), and
-``cdx_fetch_sec``/``cdx_fetch_records_s`` time ``fetch_warc_records``
-over a 12.5% urlkey-prefix selection from the published CDXJ — the
-index-first access pattern; the number to watch is fetch_sec staying
-well under read_sec at matching selectivity (selected bytes are the
-only bytes read). COMPARABILITY: first round carrying the leg — r12 numbers are
-the baselines; the fixture is sf-INDEPENDENT (same bytes at every
-SF), so cross-round deltas here are decode/layout changes or box
-noise, never data-scale composition. Round-over-round rule: compare
-read_mb_s against the sentinel-normalized suite the same way as
-query medians; a >1.25x move with a flat sentinel is a real
-ingest-path regression (Arrow mapper, gzip walker, http_text_of).
-
-ROUND-10 COMPOSITION CHANGES: ``multimodal_features``'s feat leg
-became a 4-format cycle (JPEG quarter incl. 4:2:0/RST variants, GIF
-slot every 20th doc), carries the full hash family (dhash + NEW ahash
-+ wavhash — same single decode pass, negligible cost), and its phash
-leg's planted groups gained JPEG + GIF cross-codec twins over a new
-tie-free pattern;
-``curation_pipeline_docs``' url stage now resolves TRUE eTLD+1
-against the embedded PSL snapshot (in-row IN lists) over a host mix
-with .co.uk / github.io / k12.ca.us shapes.
-
-ROUND-11 COMPOSITION CHANGES: ``curation_pipeline_docs`` gained the
-LICENSE/COPYRIGHT screen as a ninth oracle-checked drop-reason stage
-(map-only regex columns riding the ``per`` projection — no new
-shuffle), and the query now has per-stage ``parts`` attribution
-(url/license/dup/gopher/quality/adaptive/contam/logprob —
-stage-restricted builders, each timing ONE stage's marginal pipeline
-over the base scan). ``multimodal_features``' feat leg gained two more
-hash columns in the SAME single decode pass (temporal video vhash +
-Haitsma-Kalker audio spechash — per-payload arithmetic only, no new
-decode, no new shuffle), so any movement there is hash math, not plan
-— and a THIRD leg, ``vdup`` (30 planted 4-frame MJPEG-AVIs through
-vhash + the banded Hamming join), attributable via its parts entry;
-expect ~1.5-1.8x on that row vs r10 from the two new legs combined.
-``text_stats`` gained the jusText main-content extraction columns
-(main_text/block_classes over a deterministic boilerplate wrapper):
-measured composition cost ~2.4 -> ~3.5-4.3 s warm at sf0.1 (block
-structs staged once per doc via the query's SPARK-36718 level
-projections — the naive single-expression form re-derived them ~5x
-for 11+ s and was rejected; the residual is the per-block strip
-chain, which IS the operator). ``curation_pipeline_docs`` gained the
-URL-BLOCKLIST stage (in-row NOT-isin on the shared eTLD+1 resolution
-— no new shuffle; 'blocked' now outranks every reason, so the
-histogram moved) AND the ROBOTS-COMPLIANCE stage (a 2-site driver-
-compiled rule relation broadcast + in-row array_max resolution — one
-tiny broadcast join, no corpus shuffle, no Python). The BM25/IVF/signature/fingerprint store initial
-writes now repartition on their bucket key (~1 file/bucket instead of
-tasks x buckets): ``bm25_search_docs`` 7.15 -> ~5.0 s and
-``ann_ivf_topk`` 7.29 -> ~5.8 s warm are LAYOUT wins, not noise.
-
-PER-PART TIMINGS: tagged-union/composition rows time several unrelated
-pipelines in one number; ``parts`` decomposes them — one warm
-single-shot timing per leg (QUERY_PARTS in plans/queries.py: union
-legs isolated by tag filter + Catalyst branch pruning, joined grains
-rebuilt standalone). Use parts for regression ATTRIBUTION; the summed
-row stays the continuity number. Round 7: ``line_dedup_docs`` gained
-the ExactSubstr token-grain dedup as a fourth joined grain, so its
-round-6 number (1.95 s) covers three of the four grains now timed;
-``snapshot_upsert`` gained the SCD2 history-store leg, which
-materializes a real two-batch on-disk store per run (two atomic-swap
-writes) — its round-6 number (0.58 s) covers only the last-write-wins
-leg, and the ``parts`` map separates the two; ``rollup_events_hourly``
-additionally carries a mergeable HLL distinct-user sketch through the
-store plus an exact-COUNT-DISTINCT verification join, so its round-6
-number (2.75 s) covers neither.
-
-ROUND-9 DRIFT INVESTIGATION (the round-7 protocol): a mid-round full
-run read uniformly ~1.35x r8 INCLUDING untouched pure-relational
-queries; the final end-of-round run on a quieter box landed at
-geomean 1.13x with several untouched queries back at or below r8
-(dedup_exact 0.88x, hash_split 0.93x, dedup_keep_last 0.96x) — the
-residual spread is session load noise plus real composition growth,
-attributed per-part: ann_lsh_topk 1.45x carries the NEW ham leg
-(parts: lsh 2.37 s vs ham 1.53 s), curation carries the URL stage,
-line_dedup the c4 grain (0.40 s part), multimodal_features the fused
-hash columns. Treat cross-round deltas under ~1.25x as environment
-noise unless a plan diff corroborates them (the r7/r8 rule).
-
-ROUND-9 COMPOSITION CHANGES (continued 3): ``hash_split_documents``'s
-split part gained the token-budget selection columns (one short
-score-bucket aggregate + one bucket-keyed window on top of the
-map-only pass).
-
-ROUND-9 COMPOSITION CHANGES (continued 2): ``ann_lsh_topk`` became a
-tagged union — the lsh leg plus the NEW ``ham`` leg (compressed-domain
-binary ANN: 64-plane sign codes + Hamming pre-rank + exact re-rank);
-its parts map attributes the two legs.
-
-ROUND-9 COMPOSITION CHANGES (continued): ``line_dedup_docs`` gained
-the ``c4`` grain (C4 line-rule cleaning over a synthesized punctuated
-twin — one more map-only projection + the shared doc_id join) and
-``ngram_contamination_docs`` the ``sem`` leg (broadcast-bench exact
-cosine argmax; that query is not in the bench suite).
-
-ROUND-9 COMPOSITION CHANGES: ``curation_pipeline_docs`` gained the
-URL-dedup + per-domain-cap first stage (two more short-key window
-shuffles over a synthesized URL column — operators/weburl.py), so its
-round-8 number (3.1 s warm) covers two fewer stages than round 9's.
-
-ROUND-9 PART SPLIT: the persisted-index legs now time build vs probe
-separately — ``bm25idx_build``/``bm25idx_probe`` and
-``ivfstore_build``/``ivfstore_probe`` replace the single ``bm25idx``/
-``ivfstore`` part entries (the full-query rows still rebuild their
-store per run for correctness visibility; the parts map is where a
-probe-path regression must be visible on its own).
-
-ROUND-8 COMPOSITION CHANGES (continued 6): ``ngram_jaccard_adjacent``
-became a tagged union — the adjacent-pair verification plus the NEW
-``ppjoin`` leg (exact prefix-filtered set-similarity self-join over
-docs < 500 at t=0.5); its parts map attributes the two legs.
-
-ROUND-8 COMPOSITION CHANGES (continued 5): ``embedding_cosine_topk``
-gained the ``hardneg`` leg (hard-negative mining: one more corpus
-streaming pass against the broadcast anchors + per-anchor window)
-and ``hash_split_documents``'s map-only pass now also carries the
-epoch-shuffle shard/pos columns (one shard-keyed window).
-
-ROUND-8 COMPOSITION CHANGES (continued 4): ``top_terms`` gained the
-``doclp2`` leg (interpolated bigram LM — one more corpus explode, two
-short-key count aggregates, broadcast model tables) and now has a
-parts map (term/doclp/pmi/heavy/doclp2) for attribution.
-
-ROUND-8 COMPOSITION CHANGES (continued 3): ``rollup_events_hourly``
-now also carries a mergeable KLL quantile sketch of value through the
-store (write + refresh + union) plus an exact-percentile verification
-aggregate for its ``p95_in_rank_band`` guard, and
-``approx_distinct_users`` gained the ``overlap`` leg (theta-sketch
-distinct intersection of odd-day vs even-day users per event_type,
-plus its exact two-sided verification aggregate) — that row now has a
-parts map (sketch/auc/auc_lang/overlap) for attribution.
-
-ROUND-8 COMPOSITION CHANGES (continued 2): ``sessionize_events``
-gained the ``anomaly`` leg (rolling_zscore over gapless hourly
-per-type counts — one more event_type-keyed window pass),
-``snapshot_upsert`` the ``diff`` leg (CDC full-outer pk join of the
-same two generations the upsert merges), and ``stats_agg_orders``
-the ``dq`` leg (five data-quality expectations in one aggregate
-scan); ``sessionize_events`` additionally gained the ``debounce``
-leg (first-event-per-burst suppression — one more user-keyed window
-pass over the sess part's shuffle class); the rows' parts maps
-attribute the new legs separately.
-
-ROUND-8 COMPOSITION CHANGES (continued): ``bm25_search_docs`` also
-gained the ``bm25idx`` leg — a REAL persisted term-bucketed postings
-index (write_bm25_index) built into a temp store and probed per run,
-its rows oracle-pinned identical to the in-memory ranking; the row's
-per-part timings (bm25/rrf/bm25idx) attribute the three legs
-separately via parts-restricted builders.
-
-ROUND-8 COMPOSITION CHANGES: ``bm25_search_docs`` became a hybrid-
-retrieval union — the BM25 leg plus reciprocal-rank fusion with a
-hashed-TF cosine ranking of the same queries (rrf leg; the BM25
-ranking is checkpointed so its corpus pass runs once);
-``ann_ivf_topk`` gained the ``ivfstore`` branch (a REAL persisted IVF
-index store written + probed per run — its earlier numbers cover two
-of the three branches); ``sessionize_events`` gained the
-``gapfill`` leg (time-series resample + zero/locf fill over a dense
-15-minute spine, operators/timeseries.py), so its earlier numbers
-cover three of its four parts; ``snapshot_upsert``'s scd2 leg now
-materializes the BUCKET-PARTITIONED history store
-(operators/scd2_partitioned.py) instead of the flat one — same merge,
-different sink layout. (``semi_anti_join_customers`` also gained the
-edit-distance fuzzy-join leg but is not in the bench set.)
-
-ROUND-7 DRIFT RESOLVED (round-8 investigation): the uniform one-sided
-~1.1-1.2x drift on content-stable queries in the round-7 driver run was
-CONCURRENT BOX LOAD, not a conf or code regression — the effective
-Spark conf is unchanged since round 1 (git: session.py untouched), and
-a round-8 isolated re-run (idle box, 5 passes each) returned the
-stable queries to round-6 levels or below: sessionize_events 2.37 s
-(r6 2.45, r7 2.87), json_extract_agg 0.65 s (r6 0.72, r7 0.79),
-asof_join_orders 0.97 s (r6 0.83, r7 1.06), curation 3.06 s (r6 2.91,
-r7 3.30), minhash 1.97 s (r6 1.83). Treat cross-round deltas under
-~1.25x as environment noise unless a plan diff corroborates them.
-
-SUITE COMPOSITION CHANGES (for cross-round comparisons, compare
-per-query, not totals): round 6 added two entries absent from every
-earlier bench (``dedup_incremental_docs`` — the full incremental-dedup
-pipeline with oracle instrumentation, the suite's most expensive entry
-by design — and ``bm25_search_docs``), and ``dedup_exact_docs`` now
-also computes winnowing rolling-hash fingerprints per survivor, so its
-round-5 number (0.36 s) reflects strictly less work. Later in round 6
-``ann_ivf_topk`` became a union of TWO index pipelines — the original
-IVF top-k plus the IVF+PQ composition (codebook training, ADC scoring,
-planted-retrieval guard) — so its round-5 number (1.59 s at sf0.1)
-covers roughly a third of the work the entry now does; and
-``json_extract_agg`` absorbed the struct->JSON encode direction
-(previously the separate ``struct_json`` entry);
-``embedding_cosine_topk`` gained the model-free hashed-TF retrieval
-part (per-doc feature-hashing vectors computed in-row), and
-``stats_agg_orders`` absorbed the global top-k (previously
-``order_limit_global``); and ``sessionize_events`` gained the
-ordered-funnel report and weekly cohort-retention parts (two extra
-user-keyed aggregates). ``line_dedup_docs`` (C4-style line-level corpus dedup),
-``semantic_dedup_embeddings`` (SemDeDup), and
-``curation_pipeline_docs`` (the composed per-document curation
-verdict), and ``rollup_events_hourly`` (the materialized
-continuous-aggregate store: two REAL partitioned parquet writes + an
-additive refresh per run — it times the materialization path, not a
-query) are new to the suite in round 6.
+The full payload goes to ``BENCH_FULL.json`` and is appended to
+``BENCH_HISTORY.jsonl``; the printed last line is trimmed to fit a
+1,900-character tail capture.
 """
 
 from __future__ import annotations
@@ -293,7 +44,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from gluestick_ts_spark.plans.queries import QUERIES, QUERY_PARTS
+from gluestick_ts_spark.plans.queries import QUERIES
 from gluestick_ts_spark.session import get_spark
 
 # Headline set: parity ops + relational coverage + extensions.
@@ -331,9 +82,7 @@ BENCH_QUERIES = [
     # round-9 addition: real-codec feature extraction + perceptual-hash
     # near-dup pairs (first medians are this round's baselines)
     "multimodal_features",
-    # round-8 additions: the sketch/LM/shuffle/ppjoin rows — NEW bench
-    # rows (no prior-round numbers; their first medians are this
-    # round's baselines, attributable leg-by-leg via the parts maps)
+    # round-8 additions: the sketch/LM/shuffle/ppjoin rows
     "top_terms",
     "approx_distinct_users",
     "hash_split_documents",
@@ -353,12 +102,15 @@ def _sub_median(fn, label: str = "") -> float:
 
 
 def _bench_warc_ingest(spark) -> dict:
-    """The WARC-ingest + WET-write throughput leg (round 12): see the
-    module docstring's ROUND-12 ADDITION for what it times and how to
-    compare it across rounds. Fixture is deterministic (seedless
-    arithmetic word rotation), ~100 MB raw across 16 containers, built
-    and deleted under a temp dir; generation is reported but never
-    timed."""
+    """The WARC-ingest + WET-write throughput leg (round 12). It times
+    ``read_warc(emit_text=True, emit_payload=False)`` (the curation
+    entry path), ``write_wet`` of the extracted text from a persisted
+    frame, and the CDX ``index_warc`` / ``fetch_warc_records`` sub-legs
+    (fetch over a 12.5% urlkey-prefix selection). ``read_mb_s`` is
+    on-disk container MB/s. The fixture is deterministic (seedless
+    arithmetic word rotation), sf-independent, ~100 MB raw across 16
+    containers, built and deleted under a temp dir; generation is
+    reported but never timed."""
     import shutil
     import tempfile
 
@@ -724,25 +476,6 @@ def main() -> None:
             del df
             gc.collect()
 
-    # one warm pass over the union-row legs: single-shot attribution
-    # numbers (the suite medians above stay the continuity signal)
-    parts: dict[str, dict[str, object]] = {}
-    for name, part_fns in QUERY_PARTS.items():
-        if name not in BENCH_QUERIES or name in errors:
-            continue
-        parts[name] = {}
-        for part, fn in part_fns.items():
-            t0 = time.time()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # noqa: BLE001
-                parts[name][part] = {"err": f"{type(exc).__name__}: {exc}"[:200]}
-                continue
-            parts[name][part] = round(time.time() - t0, 3)
-            del df
-            gc.collect()
-
     # round 12: the ingest-grain throughput leg (fault-isolated like
     # everything else; SPARK_GRAFT_BENCH_WARC=0 skips it)
     warc_ingest: dict | None = None
@@ -786,7 +519,7 @@ def main() -> None:
     queries_out: dict[str, object] = dict(medians)
     for n, err in errors.items():
         queries_out[n] = {"err": err}
-    # The FULL payload (cold map, parts, raw medians, everything) goes
+    # The FULL payload (cold map, raw medians, everything) goes
     # to BENCH_FULL.json (+ one appended line in BENCH_HISTORY.jsonl);
     # stdout's last line is the size-budgeted headline built below.
     full = {
@@ -798,7 +531,6 @@ def main() -> None:
         "runs": n_runs,
         "queries_cold": cold,
         "cold_total": round(sum(cold.values()), 3),
-        "parts": parts,
         "errors": len(errors),
         "sentinel": {
             "query": SENTINEL,

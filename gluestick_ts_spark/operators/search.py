@@ -329,10 +329,11 @@ def write_bm25_index(
     # for the duration of this call only; errors surface at .result().
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(
+    stats_pool = ThreadPoolExecutor(
         max_workers=1, thread_name_prefix="gs_bm25_stats"
-    ) as _stats_pool:
-        _fut_stats = _stats_pool.submit(
+    )
+    try:
+        fut_stats = stats_pool.submit(
             _corpus_stats, docs, id_col, text_col, cjk_route, cjk_n
         )
         # repartition ON the bucket key before the partitioned write:
@@ -360,7 +361,12 @@ def write_bm25_index(
         dfr.repartition(num_buckets, "bucket").write.mode(mode).partitionBy(
             "bucket"
         ).parquet(join_uri(path, _BM25_DF_DIR))
-        n_docs, sum_dl = _fut_stats.result()
+        n_docs, sum_dl = fut_stats.result()
+    finally:
+        # a failed postings/docfreq write raises NOW: the pool is not
+        # joined, so the error never waits for the corpus-sized stats
+        # job (on success that job is already done)
+        stats_pool.shutdown(wait=False, cancel_futures=True)
     meta = {
         "num_buckets": num_buckets,
         # the term grain is part of the store's FROZEN contract, like

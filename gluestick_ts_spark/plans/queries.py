@@ -1208,7 +1208,7 @@ def q_parse_objs_keep_original(spark, sf):
     return ev.select("event_id", out.alias("k_or_raw"))
 
 
-def q_ngram_contamination_docs(spark, sf, parts=("ngram", "sem")):
+def q_ngram_contamination_docs(spark, sf):
     """Benchmark-contamination screens, both modalities, as ONE tagged
     union (registry-folding pattern).
 
@@ -1224,42 +1224,34 @@ def q_ngram_contamination_docs(spark, sf, parts=("ngram", "sem")):
     argmax, ties to lowest id) plus the >= 0.92 leak verdict. The
     benchmark side broadcasts; the corpus streams once. Oracle: DuckDB
     brute-forces the same argmax with the same rounding."""
-    parts = set(parts)
-    legs = []
-    _nl = lambda t: F.lit(None).cast(t)  # noqa: E731
-    if "ngram" in parts:
-        d = _t(spark, sf, "documents")
-        bench = d.where(F.col("doc_id") % 20 == 0)
-        corp = d.where(F.col("doc_id") % 20 != 0)
-        legs.append(ngram_contamination(corp, bench, n=8).select(
-            F.lit("ngram").alias("part"),
-            "doc_id",
-            "n_contaminated",
-            "contaminated",
-            _nl("long").alias("match_id"),
-            _nl("double").alias("max_cosine"),
-        ))
-    if "sem" in parts:
-        from ..operators.similarity import semantic_contamination
+    from ..operators.similarity import semantic_contamination
 
-        e = _t(spark, sf, "embeddings")
-        sem = semantic_contamination(
-            e.where(F.col("vec_id") % 20 != 0),
-            e.where(F.col("vec_id") % 20 == 0),
-            threshold=0.92,
-        )
-        legs.append(sem.select(
-            F.lit("sem").alias("part"),
-            F.col("bench_id").alias("doc_id"),
-            _nl("long").alias("n_contaminated"),
-            "contaminated",
-            "match_id",
-            "max_cosine",
-        ))
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    _nl = lambda t: F.lit(None).cast(t)  # noqa: E731
+    d = _t(spark, sf, "documents")
+    bench = d.where(F.col("doc_id") % 20 == 0)
+    corp = d.where(F.col("doc_id") % 20 != 0)
+    ngram = ngram_contamination(corp, bench, n=8).select(
+        F.lit("ngram").alias("part"),
+        "doc_id",
+        "n_contaminated",
+        "contaminated",
+        _nl("long").alias("match_id"),
+        _nl("double").alias("max_cosine"),
+    )
+    e = _t(spark, sf, "embeddings")
+    sem = semantic_contamination(
+        e.where(F.col("vec_id") % 20 != 0),
+        e.where(F.col("vec_id") % 20 == 0),
+        threshold=0.92,
+    )
+    return ngram.unionByName(sem.select(
+        F.lit("sem").alias("part"),
+        F.col("bench_id").alias("doc_id"),
+        _nl("long").alias("n_contaminated"),
+        "contaminated",
+        "match_id",
+        "max_cosine",
+    ))
 
 
 def q_approx_distinct_users(spark, sf):
@@ -1699,7 +1691,7 @@ _TS_SEG_RULE_DUCK = gopher_rules_duck_sql(
 )["seg_mean_word_len_ok"]
 
 
-def q_text_stats(spark, sf, parts=("stats", "justext")):
+def q_text_stats(spark, sf):
     """Quality scoring + token counting over documents plus the
     Gopher-rule overall verdict — oracle-checked, so all eight
     published rules are replicated in SQL and hash-compared. Round 11
@@ -1729,7 +1721,6 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
 
     from ..operators.dedup import _spread
 
-    parts = set(parts)
     # round 16 (optimization): the whole leg is map-only expression CPU
     # (0 exchanges), so its parallelism IS the scan's split count — and
     # the sf test corpus is ONE small single-row-group parquet file,
@@ -1740,94 +1731,27 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
     # partitioning scale-adaptive, derive from input size) — on a real
     # sharded corpus it is a no-op and document text never shuffles.
     d = _spread(_t(spark, sf, "documents"))
-    if parts == {"justext"}:
-        # marginal builder (bench attribution): ONLY the jusText
-        # columns over the base scan — same lang-routed staging as the
-        # full path (round 12)
-        lv = d.select("doc_id", _ts_text_expr().alias("__jt_text"))
-        lv = lv.select(
-            "doc_id", "__jt_text",
-            F.expr(lang_id_sql("__jt_text")).alias("__jt_lang"),
-        )
-        lv = lv.select(
-            "doc_id", "__jt_text", "__jt_lang",
-            stopwords_for_lang_expr(F.col("__jt_lang")).alias("__jt_sw"),
-            F.expr(_JT_RT_SQL).alias("__rt"),
-            # round 16: dictionary-segmented tokens, routed docs only
-            # (when() short-circuits per row — non-CJK docs never pay
-            # the fold), staged ONCE for the seg_mean_word_len_ok rule
-            F.when(
-                F.expr(_JT_CJK_SQL),
-                cjk_dict_tokens_expr("__jt_text", _SEG_WORDS),
-            ).alias("__seg"),
-        )
-        st = _jt_blocks(
-            F.concat(F.lit(_JT_HTML_PRE), F.col("__jt_text"), F.lit(_JT_HTML_POST)),
-            F.col("__jt_sw"),
-            80,
-            1,
-            cjk=F.col("__jt_lang").isin(*CJK_LANGS),
-        )
-        lv = lv.select(
-            "doc_id", "__jt_lang", "__jt_text", "__rt", "__seg",
-            st.alias("__jt_st"),
-        )
-        lv = lv.select(
-            "doc_id",
-            "__jt_lang",
-            "__jt_text",
-            "__rt",
-            "__seg",
-            "__jt_st",
-            F.transform(F.col("__jt_st"), lambda s: s["cls"]).alias("__jt_cls"),
-        )
-        lv = lv.select(
-            "doc_id", "__jt_lang", "__jt_text", "__rt", "__seg", "__jt_st",
-            _jt_context(F.col("__jt_cls")).alias("__jt_fin"),
-        )
-        return lv.select(
-            "doc_id",
-            F.col("__jt_lang").alias("jt_lang"),
-            F.array_join(
-                F.filter(
-                    F.zip_with(
-                        F.col("__jt_st"),
-                        F.col("__jt_fin"),
-                        lambda s, c: F.when(c == "good", s["txt"]),
-                    ),
-                    lambda t: t.isNotNull(),
-                ),
-                " ",
-            ).alias("main_text"),
-            F.array_join(F.col("__jt_fin"), ",").alias("block_classes"),
-            F.expr(_JT_GOPHER_ROUTED_SQL).alias("gopher_pass_routed"),
-            F.expr(_TS_SEG_RULE_SQL).alias("__seg_ok"),
-        ).withColumn(
-            "gopher_pass_seg",
-            F.col("gopher_pass_routed") & F.col("__seg_ok"),
-        ).drop("__seg_ok")
-    jt = "justext" in parts
-    if jt:
-        # round 12: language-ROUTED stoplist staging — the planted-text
-        # twin, its predicted language, and the routed stoplist array
-        # are each projected ONCE in lower selects (lang runs per doc,
-        # never per word; the SPARK-36718 staging rationale)
-        d = d.select("doc_id", "text", _ts_text_expr().alias("__jt_text"))
-        d = d.select("*", F.expr(lang_id_sql("__jt_text")).alias("__jt_lang"))
-        d = d.select(
-            "*",
-            stopwords_for_lang_expr(F.col("__jt_lang")).alias("__jt_sw"),
-            F.expr(_JT_RT_SQL).alias("__rt"),
-            # round 16: seg tokens staged once, routed docs only
-            F.when(
-                F.expr(_JT_CJK_SQL),
-                cjk_dict_tokens_expr("__jt_text", _SEG_WORDS),
-            ).alias("__seg"),
-        )
+    # round 12: language-ROUTED stoplist staging — the planted-text
+    # twin, its predicted language, and the routed stoplist array
+    # are each projected ONCE in lower selects (lang runs per doc,
+    # never per word; the SPARK-36718 staging rationale)
+    d = d.select("doc_id", "text", _ts_text_expr().alias("__jt_text"))
+    d = d.select("*", F.expr(lang_id_sql("__jt_text")).alias("__jt_lang"))
+    d = d.select(
+        "*",
+        stopwords_for_lang_expr(F.col("__jt_lang")).alias("__jt_sw"),
+        F.expr(_JT_RT_SQL).alias("__rt"),
+        # round 16: seg tokens staged once, routed docs only
+        F.when(
+            F.expr(_JT_CJK_SQL),
+            cjk_dict_tokens_expr("__jt_text", _SEG_WORDS),
+        ).alias("__seg"),
+    )
+    jt_cols = ["__jt_lang", "__jt_text", "__rt", "__seg"]
     lvl1 = d.select(
         "doc_id",
         "text",
-        *(["__jt_lang", "__jt_text", "__rt", "__seg"] if jt else []),
+        *jt_cols,
         F.expr("split(lower(trim(text)), '\\\\s+')").alias("__toks"),
         # jusText block structs projected ONCE (strip chain + anchor
         # extract + stopword filter are the expensive part — the
@@ -1836,23 +1760,17 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         # synthetic corpus ~6% (real jusText lists are ~10x larger), so
         # the tunable density floor drops to 10% to exercise BOTH
         # classes + the inheritance pass on this data
-        *(
-            [
-                _jt_blocks(
-                    F.concat(
-                        F.lit(_JT_HTML_PRE),
-                        F.col("__jt_text"),
-                        F.lit(_JT_HTML_POST),
-                    ),
-                    F.col("__jt_sw"),
-                    80,
-                    1,
-                    cjk=F.col("__jt_lang").isin(*CJK_LANGS),
-                ).alias("__jt_st")
-            ]
-            if jt
-            else []
-        ),
+        _jt_blocks(
+            F.concat(
+                F.lit(_JT_HTML_PRE),
+                F.col("__jt_text"),
+                F.lit(_JT_HTML_POST),
+            ),
+            F.col("__jt_sw"),
+            80,
+            1,
+            cjk=F.col("__jt_lang").isin(*CJK_LANGS),
+        ).alias("__jt_st"),
     )
     g2 = (
         "zip_with(__toks, slice(__toks, 2, greatest(size(__toks) - 1, 1)), "
@@ -1866,14 +1784,11 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         "doc_id",
         "text",
         "__toks",
-        *(["__jt_st", "__jt_lang", "__jt_text", "__rt", "__seg"] if jt else []),
+        "__jt_st",
+        *jt_cols,
         F.expr(f"slice({g3}, 1, greatest(size(__toks) - 2, 1))").alias("__grams"),
         F.expr("split(text, '\\n')").alias("__lines"),
-        *(
-            [F.transform(F.col("__jt_st"), lambda s: s["cls"]).alias("__jt_cls")]
-            if jt
-            else []
-        ),
+        F.transform(F.col("__jt_st"), lambda s: s["cls"]).alias("__jt_cls"),
     )
     # Gopher's repetition rule sees NO grams for sub-3-token docs (the
     # pseudo-gram the slice floor produces is fake data); dup_3gram_ratio
@@ -1885,8 +1800,9 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         "__toks",
         "__grams",
         "__lines",
-        *(["__jt_st", "__jt_lang", "__jt_text", "__rt", "__seg"] if jt else []),
-        *([_jt_context(F.col("__jt_cls")).alias("__jt_fin")] if jt else []),
+        "__jt_st",
+        *jt_cols,
+        _jt_context(F.col("__jt_cls")).alias("__jt_fin"),
         F.expr(
             "CASE WHEN size(__toks) >= 3 THEN __grams ELSE array() END"
         ).alias("__gg"),
@@ -1911,7 +1827,7 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
             "text", toks_sql="__toks", lines_sql="__lines", grams_sql="__gg"
         ).values()
     )
-    out = lvl3.select(
+    return lvl3.select(
         "doc_id",
         F.expr("CAST(size(__toks) AS BIGINT)").alias("n_words"),
         F.expr("CAST(regexp_count(text, '\\\\w+|[^\\\\w\\\\s]') AS BIGINT)").alias(
@@ -1944,45 +1860,36 @@ def q_text_stats(spark, sf, parts=("stats", "justext")):
         # equality), structs and classes computed once per doc;
         # round 12: jt_lang exposes the routing verdict so the planted
         # non-EN positives are count-visible in the driver output
-        *(
-            [
-                F.col("__jt_lang").alias("jt_lang"),
-                F.array_join(
-                    F.filter(
-                        F.zip_with(
-                            F.col("__jt_st"),
-                            F.col("__jt_fin"),
-                            lambda s, c: F.when(c == "good", s["txt"]),
-                        ),
-                        lambda t: t.isNotNull(),
-                    ),
-                    " ",
-                ).alias("main_text"),
-                F.array_join(F.col("__jt_fin"), ",").alias("block_classes"),
-                # round 13: the char-grain routed Gopher verdict over
-                # the planted text — flips false -> true for the CJK
-                # plants ONLY under routing (unrouted they are one
-                # giant pseudo-token and every word rule fails)
-                F.expr(_JT_GOPHER_ROUTED_SQL).alias("gopher_pass_routed"),
-                # round 16: the ninth rule alone — the word-grain
-                # verdict gopher_pass_seg = routed AND seg rule is
-                # assembled in the wrapper select below so the eight
-                # routed rules are never evaluated twice
-                F.expr(_TS_SEG_RULE_SQL).alias("__seg_ok"),
-            ]
-            if jt
-            else []
-        ),
-    )
-    if jt:
-        out = out.withColumn(
-            "gopher_pass_seg",
-            F.col("gopher_pass_routed") & F.col("__seg_ok"),
-        ).drop("__seg_ok")
-    return out
+        F.col("__jt_lang").alias("jt_lang"),
+        F.array_join(
+            F.filter(
+                F.zip_with(
+                    F.col("__jt_st"),
+                    F.col("__jt_fin"),
+                    lambda s, c: F.when(c == "good", s["txt"]),
+                ),
+                lambda t: t.isNotNull(),
+            ),
+            " ",
+        ).alias("main_text"),
+        F.array_join(F.col("__jt_fin"), ",").alias("block_classes"),
+        # round 13: the char-grain routed Gopher verdict over
+        # the planted text — flips false -> true for the CJK
+        # plants ONLY under routing (unrouted they are one
+        # giant pseudo-token and every word rule fails)
+        F.expr(_JT_GOPHER_ROUTED_SQL).alias("gopher_pass_routed"),
+        # round 16: the ninth rule alone — the word-grain
+        # verdict gopher_pass_seg = routed AND seg rule is
+        # assembled in the wrapper select below so the eight
+        # routed rules are never evaluated twice
+        F.expr(_TS_SEG_RULE_SQL).alias("__seg_ok"),
+    ).withColumn(
+        "gopher_pass_seg",
+        F.col("gopher_pass_routed") & F.col("__seg_ok"),
+    ).drop("__seg_ok")
 
 
-def q_lang_scores(spark, sf, parts=("lang", "clf")):
+def q_lang_scores(spark, sf):
     """Language-ID heuristic: marker-word overlap scores + argmax.
     Built from the parsed-SQL fragments (lang_score_sql/lang_id_sql) —
     one parser call per column instead of ~50 py4j constructions per
@@ -1999,8 +1906,7 @@ def q_lang_scores(spark, sf, parts=("lang", "clf")):
     constants — reaches bit-identical weights. Output columns:
     ``clf_score`` (micro-unit LONG, exact integer arithmetic ->
     hash-exact), ``clf_prob`` (rounded sigmoid), ``clf_keep``
-    (decision boundary). ``parts`` restricts for bench attribution
-    (``lang`` = the original row, ``clf`` = train + apply)."""
+    (decision boundary)."""
     from ..operators.dedup import _spread
 
     # round 16 (optimization): single small-file scan = ONE task for
@@ -2016,66 +1922,65 @@ def q_lang_scores(spark, sf, parts=("lang", "clf")):
     # exercised; the classifier below keeps reading the raw corpus
     # text (its oracle restates training — don't grow it).
     d = d.select("*", _jt_text_expr().alias("__lt"))
-    sel = [F.col("doc_id")]
-    if "lang" in parts:
-        sel += [
+    sel = [
+        F.col("doc_id"),
+        *(
             F.expr(lang_score_sql("__lt", lang)).alias(f"score_{lang}")
             for lang in DEFAULT_LANGS
-        ]
-        sel.append(F.expr(lang_id_sql("__lt")).alias("lang_pred"))
-        # round 13: the blocked-terms content gate rides here for
-        # driver visibility — a deterministic 2-term policy list drawn
-        # from the synth vocabulary (one whole-token term + one
-        # word-bounded phrase, so both matchers are oracle-exercised);
-        # the DuckDB twin is GENERATED from the same list
-        from ..functions.text import blocked_terms_flags_expr
+        ),
+        F.expr(lang_id_sql("__lt")).alias("lang_pred"),
+    ]
+    # round 13: the blocked-terms content gate rides here for
+    # driver visibility — a deterministic 2-term policy list drawn
+    # from the synth vocabulary (one whole-token term + one
+    # word-bounded phrase, so both matchers are oracle-exercised);
+    # the DuckDB twin is GENERATED from the same list
+    from ..functions.text import blocked_terms_flags_expr
 
-        # round 16 (optimization): the struct is STAGED as one column
-        # (the __seg pattern below) — three getField reads of the bare
-        # expression re-evaluated the whole tokenize+match tree per
-        # output column
-        d = d.select(
-            "*", blocked_terms_flags_expr("text", _BT_TERMS).alias("__bt")
-        )
-        sel += [
-            F.col("__bt").getField("n_hits").alias("bt_hits"),
-            F.col("__bt").getField("hit_frac").alias("bt_frac"),
-            F.col("__bt").getField("blocked").alias("bt_blocked"),
-        ]
-        # round 15: dictionary WORD segmentation rides here for driver
-        # visibility — FMM over the planted CJK texts against the
-        # _SEG_WORDS policy list (cjk_dict_tokens_expr), emitted as a
-        # token count + the md5 of the chr(31)-joined rebuild; NULL on
-        # non-routed rows (the fold never runs there — CASE WHEN
-        # short-circuits). STAGED as one struct column (the __lt/__rt
-        # SPARK-36718 pattern) so the fold runs once per row, not once
-        # per output column. The DuckDB twin re-derives the greedy
-        # match as a WITH RECURSIVE per-position walk (_seg_duck_ctes).
-        from ..functions.text import cjk_dict_tokens_expr, is_cjk_doc_expr
+    # round 16 (optimization): the struct is STAGED as one column
+    # (the __seg pattern below) — three getField reads of the bare
+    # expression re-evaluated the whole tokenize+match tree per
+    # output column
+    d = d.select(
+        "*", blocked_terms_flags_expr("text", _BT_TERMS).alias("__bt")
+    )
+    sel += [
+        F.col("__bt").getField("n_hits").alias("bt_hits"),
+        F.col("__bt").getField("hit_frac").alias("bt_frac"),
+        F.col("__bt").getField("blocked").alias("bt_blocked"),
+    ]
+    # round 15: dictionary WORD segmentation rides here for driver
+    # visibility — FMM over the planted CJK texts against the
+    # _SEG_WORDS policy list (cjk_dict_tokens_expr), emitted as a
+    # token count + the md5 of the chr(31)-joined rebuild; NULL on
+    # non-routed rows (the fold never runs there — CASE WHEN
+    # short-circuits). STAGED as one struct column (the __lt/__rt
+    # SPARK-36718 pattern) so the fold runs once per row, not once
+    # per output column. The DuckDB twin re-derives the greedy
+    # match as a WITH RECURSIVE per-position walk (_seg_duck_ctes).
+    from ..functions.text import cjk_dict_tokens_expr, is_cjk_doc_expr
 
-        seg = cjk_dict_tokens_expr("__lt", _SEG_WORDS)
-        # LET-BIND the fold result (lambda params are materialized):
-        # size+md5 read ONE evaluation, not two copies of the fold
-        seg_nh = F.get(
-            F.transform(
-                F.array(seg),
-                lambda sg: F.struct(
-                    F.size(sg).cast("long").alias("n"),
-                    F.md5(F.concat_ws("\x1f", sg)).alias("h"),
-                ),
+    seg = cjk_dict_tokens_expr("__lt", _SEG_WORDS)
+    # LET-BIND the fold result (lambda params are materialized):
+    # size+md5 read ONE evaluation, not two copies of the fold
+    seg_nh = F.get(
+        F.transform(
+            F.array(seg),
+            lambda sg: F.struct(
+                F.size(sg).cast("long").alias("n"),
+                F.md5(F.concat_ws("\x1f", sg)).alias("h"),
             ),
-            0,
-        )
-        d = d.select(
-            "*",
-            F.when(is_cjk_doc_expr("__lt"), seg_nh).alias("__seg"),
-        )
-        sel += [
-            F.col("__seg").getField("n").alias("seg_n_words"),
-            F.col("__seg").getField("h").alias("seg_md5"),
-        ]
-    if "clf" not in parts:
-        return d.select(*sel)
+        ),
+        0,
+    )
+    d = d.select(
+        "*",
+        F.when(is_cjk_doc_expr("__lt"), seg_nh).alias("__seg"),
+    )
+    sel += [
+        F.col("__seg").getField("n").alias("seg_n_words"),
+        F.col("__seg").getField("h").alias("seg_md5"),
+    ]
     # ONE materialized pass builds lang columns, the classifier
     # features, and the bootstrap label together; training reads the
     # cached arrays (features_col) and the returned frame scores from
@@ -2296,7 +2201,7 @@ def _robots_case_sql(dom_sql: str, path_sql: str) -> str:
 _BLOCKED_DOMAINS = ("tracker-farm.example",)
 
 
-def q_curation_pipeline_docs(spark, sf, stages=None):
+def q_curation_pipeline_docs(spark, sf):
     """END-TO-END curation verdict per document — the composition a
     training-data pipeline actually runs, with drop-reason
     attribution in priority order: benchmark membership ->
@@ -2373,11 +2278,7 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
     exercised both ways), matching is per raw HOST (origin scope, the
     www. and bare hosts each carry the file), and the oracle's verdict
     CASE is GENERATED from the same robots texts via the operator's
-    own parse/compile functions (_robots_case_sql).
-
-    ``stages`` restricts the build to one stage's marginal pipeline for
-    bench attribution (QUERY_PARTS) — the full query (default) is the
-    driver/oracle surface."""
+    own parse/compile functions (_robots_case_sql)."""
     from ..functions.text import license_flags_expr, quality_score_expr
     from ..operators.dedup import _spread, ngram_contamination
     from ..operators.profile import adaptive_quality_filter, unigram_logprob_scores
@@ -2406,7 +2307,7 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
         )
     )
     # round 16 (optimization): the staged corpus (planted text synth +
-    # lang-ID, ~1.5 s/pass at sf0.1 per the bench parts) is read by
+    # lang-ID, ~1.5 s/pass at sf0.1) is read by
     # EVERY downstream stage — the per-doc flag projection (twice,
     # through the adaptive filter's cuts+join-back), the contamination
     # join's two slices, and the unigram model's passes.
@@ -2423,13 +2324,10 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
     # as its own Project layer below, shared across the eight rules
     # (SPARK-36718 keeps multi-referenced non-cheap projections
     # un-inlined) and computed exactly once per row, without doubling
-    # the checkpoint's materialized bytes. Full path only: the
-    # single-stage bench builders keep the lazy staging so their
-    # marginal-cost attribution stays comparable across rounds.
-    if stages is None:
-        d = d.select(
-            "doc_id", "lang", "text", "__jt_lang"
-        ).localCheckpoint(eager=True)
+    # the checkpoint's materialized bytes.
+    d = d.select("doc_id", "lang", "text", "__jt_lang").localCheckpoint(
+        eager=True
+    )
     d = d.withColumn("__rt", F.expr(_CUR_RT_SQL))
     _cjk_pred = F.expr(_JT_CJK_SQL)
     # license/copyright boilerplate footers planted as a pure function
@@ -2441,83 +2339,8 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
     for _m, _s in reversed(_LIC_FOOTERS):
         _footer = F.when(F.col("doc_id") % 20 == _m, F.lit(_s)).otherwise(_footer)
     _lic_text = F.concat(F.col("text"), _footer)
-
-    def _stage_rules(df):
-        """The Project layer under the per-doc rules: gopher's 3-gram
-        and line arrays and the lowered license text, each derived once
-        per row (functions/text.py staging contract)."""
-        return df.select(
-            "*",
-            F.expr(gopher_grams_sql("__rt")).alias("__gg"),
-            F.expr(gopher_lines_sql("text")).alias("__lines"),
-            F.lower(_lic_text).alias("__lic_low"),
-        )
-
     _lic = license_flags_expr(_lic_text, lowered=F.col("__lic_low"))
-    _lic_ok = _lic.getField("license_ok")  # the ONE gate rule (text.py)
     _quality = quality_score_expr("text", cjk=_cjk_pred, toks=F.col("__rt"))
-    if stages is not None:
-        # single-stage marginal-cost builders (bench attribution only;
-        # the ann_ivf mode-restricted precedent)
-        (stage,) = stages
-        if stage == "license":
-            return _stage_rules(d).select(
-                "doc_id",
-                _lic.getField("has_copyright").alias("has_copyright"),
-                _lic.getField("rights_reserved").alias("rights_reserved"),
-                _lic.getField("license_name").alias("license_name"),
-                _lic_ok.alias("license_ok"),
-            )
-        if stage == "dup":
-            per = d.select("doc_id", fingerprint_expr("text").alias("__fp"))
-            w = Window.partitionBy("__fp").orderBy("doc_id")
-            return per.withColumn(
-                "dup_ok", F.row_number().over(w) == 1
-            ).drop("__fp")
-        if stage == "gopher":
-            return _stage_rules(d).select(
-                "doc_id",
-                F.expr(_CUR_GOPHER_ROUTED_SQL).alias("gopher_ok"),
-            )
-        if stage == "quality":
-            return d.select(
-                "doc_id",
-                (_quality >= 0.5).alias("quality_ok"),
-            )
-        if stage == "adaptive":
-            per = d.select(
-                "doc_id", "lang", _quality.alias("__q"),
-            )
-            per = adaptive_quality_filter(
-                per, "__q", "lang", q=0.25, cut_col="__cut", keep_col="adaptive_ok"
-            )
-            return per.select(
-                "doc_id", F.round("__cut", 6).alias("lang_cut"), "adaptive_ok"
-            )
-        if stage == "contam":
-            return ngram_contamination(
-                d.where(F.col("doc_id") % 20 != 0),
-                d.where(F.col("doc_id") % 20 == 0),
-                n=8, cjk=_cjk_pred, cjk_n=8,
-            ).select("doc_id", "contaminated")
-        if stage == "logprob":
-            lp_sc = unigram_logprob_scores(
-                d, vocab_size=100, cjk=_cjk_pred
-            ).join(d.select("doc_id", "__jt_lang"), on="doc_id")
-            lp_sc = lp_sc.select(
-                "doc_id", "mean_logprob", "__jt_lang"
-            ).localCheckpoint(eager=True)  # see the full-path comment
-            lp_sc = adaptive_quality_filter(
-                lp_sc, "mean_logprob", "__jt_lang", q=0.10,
-                cut_col="__lpc", keep_col="lp_ok",
-            )
-            return lp_sc.select(
-                "doc_id", F.round("__lpc", 6).alias("lp_cut"), "lp_ok"
-            )
-        if stage not in ("url", "blocklist", "robots"):
-            raise ValueError(f"unknown curation stage: {stage!r}")
-        # fall through: the url/blocklist stages build the shared URL
-        # synth below and return right after their own flag
     # Scale-stable synthetic URL (a pure function of doc_id): most docs
     # get a doc-unique URL/domain, docs = 1 (mod 10) re-crawl their
     # predecessor's page (10% planted dups AT ANY sf — different
@@ -2557,21 +2380,6 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
         .when(item % 4 == 1, F.lit("?p=2#sec"))
         .otherwise(F.lit("")),
     )
-    if stages is not None:  # the url/blocklist/robots marginal builders
-        per = d.select("doc_id", url.alias("__url"))
-        if stage == "blocklist":
-            return domain_blocklist_flag(
-                per, "__url", _BLOCKED_DOMAINS, domain_col="domain"
-            ).drop("__url")
-        if stage == "robots":
-            # local-pair mode: rules compile driver-side, so the plan
-            # carries zero Python operators (the no-Python gate)
-            return robots_filter(per, list(_ROBOTS_TXT), "__url").drop("__url")
-        per = url_dedup_flag(per, "__url", "doc_id", flag_col="url_keep")
-        return domain_cap_flag(
-            per, "__url", "doc_id", cap=25, seed=1,
-            flag_col="domain_keep", domain_col="domain",
-        ).drop("__url")
     # round 16 (optimization): the rank relation's eager pagerank jobs
     # are independent of everything until the annotate join below —
     # build them on a pool thread so they overlap the URL/content
@@ -2621,7 +2429,15 @@ def q_curation_pipeline_docs(spark, sf, stages=None):
     # and measured a wash, because the 2-wide pool serialized it
     # behind lp.
     def _build_per():
-        per = _stage_rules(d).select(
+        # the Project layer under the per-doc rules: gopher's 3-gram and
+        # line arrays and the lowered license text, each derived once
+        # per row (functions/text.py staging contract)
+        per = d.select(
+            "*",
+            F.expr(gopher_grams_sql("__rt")).alias("__gg"),
+            F.expr(gopher_lines_sql("text")).alias("__lines"),
+            F.lower(_lic_text).alias("__lic_low"),
+        ).select(
             "doc_id",
             "lang",
             F.col("__jt_lang").alias("doc_lang"),
@@ -2803,10 +2619,7 @@ def q_corpus_profile_docs(spark, sf):
     return corpus_profile(_t(spark, sf, "documents"))
 
 
-def q_top_terms(
-    spark, sf,
-    parts=("term", "doclp", "pmi", "heavy", "doclp2", "doclp3", "rank"),
-):
+def q_top_terms(spark, sf):
     """Corpus token-frequency analysis, both grains, as ONE tagged
     union (registry-folding pattern — round 13 adds the ``rank`` part:
     domain PageRank over a deterministic synthetic link graph, FULL
@@ -2856,53 +2669,37 @@ def q_top_terms(
     mean_logprob3 in this part's rows."""
     from ..operators.frequent import heavy_hitters
     from ..operators.profile import (
-        bigram_logprob_scores,
         bigram_pmi,
-        trigram_logprob_scores,
+        bitri_logprob_scores,
         unigram_logprob_scores,
     )
 
-    parts = set(parts)
-    legs = []
     d = _t(spark, sf, "documents")
     # round 16 (optimization): the rank leg's eager pagerank jobs are
     # independent of every other leg — build them on a pool thread so
     # they overlap the LM model materialization and the other legs'
     # expression building (guide §2.6)
-    _fut_rank = (
-        _bg_submit(_synth_crawl_rank, d.select("doc_id"))
-        if "rank" in parts
-        else None
-    )
+    _fut_rank = _bg_submit(_synth_crawl_rank, d.select("doc_id"))
     sw = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    # round 16: each leg is built ONLY when requested — leg
-    # construction is pure plan building but not free (the py4j +
-    # analyzer cost of the LM model DAGs is seconds at this width),
-    # and the bench's per-part attribution builders were paying for
-    # every other part's construction
     toks = d.select(F.explode(tokens_expr("text")).alias("token"))
-    terms = None
-    if "term" in parts:
-        terms = (
-            toks.where((F.col("token") != "") & ~F.array_contains(sw, F.col("token")))
-            .groupBy("token")
-            .agg(F.count("*").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("token").asc())
-            .limit(50)
-            .select(
-                F.lit("term").alias("part"),
-                "token",
-                "cnt",
-                F.lit(None).cast("long").alias("doc_id"),
-                F.lit(None).cast("long").alias("n_tokens"),
-                F.lit(None).cast("double").alias("mean_logprob"),
-                F.lit(None).cast("double").alias("pmi"),
-                F.lit(None).cast("double").alias("rank"),
-            )
+    terms = (
+        toks.where((F.col("token") != "") & ~F.array_contains(sw, F.col("token")))
+        .groupBy("token")
+        .agg(F.count("*").alias("cnt"))
+        .orderBy(F.col("cnt").desc(), F.col("token").asc())
+        .limit(50)
+        .select(
+            F.lit("term").alias("part"),
+            "token",
+            "cnt",
+            F.lit(None).cast("long").alias("doc_id"),
+            F.lit(None).cast("long").alias("n_tokens"),
+            F.lit(None).cast("double").alias("mean_logprob"),
+            F.lit(None).cast("double").alias("pmi"),
+            F.lit(None).cast("double").alias("rank"),
         )
-    lp = None if "doclp" not in parts else unigram_logprob_scores(
-        d, vocab_size=100
-    ).select(
+    )
+    lp = unigram_logprob_scores(d, vocab_size=100).select(
         F.lit("doclp").alias("part"),
         F.lit(None).cast("string").alias("token"),
         F.lit(None).cast("long").alias("cnt"),
@@ -2912,9 +2709,7 @@ def q_top_terms(
         F.lit(None).cast("double").alias("pmi"),
         F.lit(None).cast("double").alias("rank"),
     )
-    pmi = None if "pmi" not in parts else bigram_pmi(
-        d, min_count=5, top_n=50
-    ).select(
+    pmi = bigram_pmi(d, min_count=5, top_n=50).select(
         F.lit("pmi").alias("part"),
         F.col("bigram").alias("token"),
         "cnt",
@@ -2924,7 +2719,7 @@ def q_top_terms(
         "pmi",
         F.lit(None).cast("double").alias("rank"),
     )
-    heavy = None if "heavy" not in parts else heavy_hitters(
+    heavy = heavy_hitters(
         d.select(F.explode(tokens_expr("text")).alias("tok")).where(
             F.col("tok") != ""
         ),
@@ -2950,37 +2745,19 @@ def q_top_terms(
     # arrays, and the whole bigram model from them.
     from ..functions.text import is_cjk_doc_expr
 
-    d2 = (
-        d.withColumn("text", _cjk_dd_text_expr(200, 61, 161))
-        if parts & {"doclp2", "doclp3"}
-        else None
+    d2 = d.withColumn("text", _cjk_dd_text_expr(200, 61, 161))
+    # round 16 (optimization): both n-gram legs are built over ONE
+    # shared model (bitri_logprob_scores — the tokenized arrays and the
+    # unigram/bigram count tables materialize once instead of the two
+    # ops re-tokenizing the planted corpus 12x between them); rows are
+    # pinned identical to the separate ops (tests/test_profile.py), so
+    # the oracle is untouched
+    lp2_raw, lp3_raw = bitri_logprob_scores(
+        d2, vocab_size=100, bigram_size=500, trigram_size=500,
+        min_count=2, lam=0.7, lam3=0.5, lam2=0.3,
+        cjk=is_cjk_doc_expr("text"),
     )
-    # round 16 (optimization): when BOTH n-gram legs are requested,
-    # build them over ONE shared model (bitri_logprob_scores — the
-    # tokenized arrays and the unigram/bigram count tables materialize
-    # once instead of the two ops re-tokenizing the planted corpus 12x
-    # between them); rows are pinned identical to the separate ops
-    # (tests/test_profile.py), so the oracle is untouched
-    lp2_raw = lp3_raw = None
-    if {"doclp2", "doclp3"} <= parts:
-        from ..operators.profile import bitri_logprob_scores
-
-        lp2_raw, lp3_raw = bitri_logprob_scores(
-            d2, vocab_size=100, bigram_size=500, trigram_size=500,
-            min_count=2, lam=0.7, lam3=0.5, lam2=0.3,
-            cjk=is_cjk_doc_expr("text"),
-        )
-    elif "doclp2" in parts:
-        lp2_raw = bigram_logprob_scores(
-            d2, vocab_size=100, bigram_size=500, min_count=2, lam=0.7,
-            cjk=is_cjk_doc_expr("text"),
-        )
-    elif "doclp3" in parts:
-        lp3_raw = trigram_logprob_scores(
-            d2, vocab_size=100, bigram_size=500, trigram_size=500,
-            min_count=2, lam3=0.5, lam2=0.3, cjk=is_cjk_doc_expr("text"),
-        )
-    lp2 = None if lp2_raw is None else lp2_raw.select(
+    lp2 = lp2_raw.select(
         F.lit("doclp2").alias("part"),
         F.lit(None).cast("string").alias("token"),
         F.lit(None).cast("long").alias("cnt"),
@@ -2994,7 +2771,7 @@ def q_top_terms(
     # corpus (model sizes keep every branch live: the top-500
     # truncations, the min_count prune, both backoff levels, and the
     # unigram OOV floor)
-    lp3 = None if lp3_raw is None else lp3_raw.select(
+    lp3 = lp3_raw.select(
         F.lit("doclp3").alias("part"),
         F.lit(None).cast("string").alias("token"),
         F.lit(None).cast("long").alias("cnt"),
@@ -3018,71 +2795,62 @@ def q_top_terms(
     # Eager at query construction (the ivf/classifier precedent): the
     # per-round dangling-mass scalars are collected, on a graph already
     # collapsed to <= 23 nodes.
-    ranks = None
-    if "rank" in parts:
-        ids = d.select("doc_id")
-        # scoped suffix table inside _synth_crawl_rank: the synth
-        # universe is *.com only, and the FULL embedded PSL snapshot
-        # compiles to an in-row when/IN tree whose per-execution
-        # analysis+codegen cost (~4-5 s at sf0.1, measured) would
-        # dwarf the 23-node graph it feeds — the caller-supplied-psl
-        # API exists for exactly this (the full table stays default
-        # and is exercised by the curation/weburl rows)
-        from ..operators.linkgraph import attach_domain_rank
-        from ..operators.psl import parse_psl_rules
+    ids = d.select("doc_id")
+    # scoped suffix table inside _synth_crawl_rank: the synth
+    # universe is *.com only, and the FULL embedded PSL snapshot
+    # compiles to an in-row when/IN tree whose per-execution
+    # analysis+codegen cost (~4-5 s at sf0.1, measured) would
+    # dwarf the 23-node graph it feeds — the caller-supplied-psl
+    # API exists for exactly this (the full table stays default
+    # and is exercised by the curation/weburl rows)
+    from ..operators.linkgraph import attach_domain_rank
+    from ..operators.psl import parse_psl_rules
 
-        _u = lambda prefix, expr, path: F.concat(  # noqa: E731
-            F.lit(prefix), expr.cast("string"), F.lit(path),
-            F.col("doc_id").cast("string"),
-        )
-        pr = _fut_rank.result()
-        ranks = pr.select(
-            F.lit("rank").alias("part"),
-            F.col("node").alias("token"),
-            F.lit(None).cast("long").alias("cnt"),
-            F.lit(None).cast("long").alias("doc_id"),
-            F.lit(None).cast("long").alias("n_tokens"),
-            F.lit(None).cast("double").alias("mean_logprob"),
-            F.lit(None).cast("double").alias("pmi"),
-            F.col("rank"),
-        )
-        # round 14: the crawl->rank chain's CONSUMER step is driver
-        # visible too — attach_domain_rank broadcast-joins the domain
-        # prior onto every document through its (synthetic) source
-        # URL's eTLD+1, the Common Crawl domain-centrality-as-feature
-        # pattern. One map-side stage (rank side broadcast); the
-        # oracle restates the join through the same pure-function
-        # domain and the exact-integer pr3 grid.
-        rankdoc = attach_domain_rank(
-            ids.select(
-                "doc_id",
-                _u("http://www.d", F.col("doc_id") % 19, ".com/p/").alias(
-                    "__url"
-                ),
-            ),
-            pr,
-            url_col="__url",
-            psl=parse_psl_rules([]),
-        ).select(
-            F.lit("rankdoc").alias("part"),
-            F.lit(None).cast("string").alias("token"),
-            F.lit(None).cast("long").alias("cnt"),
+    _u = lambda prefix, expr, path: F.concat(  # noqa: E731
+        F.lit(prefix), expr.cast("string"), F.lit(path),
+        F.col("doc_id").cast("string"),
+    )
+    pr = _fut_rank.result()
+    ranks = pr.select(
+        F.lit("rank").alias("part"),
+        F.col("node").alias("token"),
+        F.lit(None).cast("long").alias("cnt"),
+        F.lit(None).cast("long").alias("doc_id"),
+        F.lit(None).cast("long").alias("n_tokens"),
+        F.lit(None).cast("double").alias("mean_logprob"),
+        F.lit(None).cast("double").alias("pmi"),
+        F.col("rank"),
+    )
+    # round 14: the crawl->rank chain's CONSUMER step is driver
+    # visible too — attach_domain_rank broadcast-joins the domain
+    # prior onto every document through its (synthetic) source
+    # URL's eTLD+1, the Common Crawl domain-centrality-as-feature
+    # pattern. One map-side stage (rank side broadcast); the
+    # oracle restates the join through the same pure-function
+    # domain and the exact-integer pr3 grid.
+    rankdoc = attach_domain_rank(
+        ids.select(
             "doc_id",
-            F.lit(None).cast("long").alias("n_tokens"),
-            F.lit(None).cast("double").alias("mean_logprob"),
-            F.lit(None).cast("double").alias("pmi"),
-            F.col("domain_rank").alias("rank"),
-        )
-        ranks = ranks.unionByName(rankdoc)
-    for name, leg in (
-        ("term", terms), ("doclp", lp), ("pmi", pmi),
-        ("heavy", heavy), ("doclp2", lp2), ("doclp3", lp3),
-        ("rank", ranks),
-    ):
-        if name in parts:
-            legs.append(leg)
-    out = legs[0]
-    for leg in legs[1:]:
+            _u("http://www.d", F.col("doc_id") % 19, ".com/p/").alias(
+                "__url"
+            ),
+        ),
+        pr,
+        url_col="__url",
+        psl=parse_psl_rules([]),
+    ).select(
+        F.lit("rankdoc").alias("part"),
+        F.lit(None).cast("string").alias("token"),
+        F.lit(None).cast("long").alias("cnt"),
+        "doc_id",
+        F.lit(None).cast("long").alias("n_tokens"),
+        F.lit(None).cast("double").alias("mean_logprob"),
+        F.lit(None).cast("double").alias("pmi"),
+        F.col("domain_rank").alias("rank"),
+    )
+    ranks = ranks.unionByName(rankdoc)
+    out = terms
+    for leg in (lp, pmi, heavy, lp2, lp3, ranks):
         out = out.unionByName(leg)
     return out
 
@@ -3469,11 +3237,17 @@ def q_ngram_jaccard_adjacent(spark, sf):
     sa = shingles_expr(F.col("ta"), 3)
     sb = shingles_expr(F.col("tb"), 3)
     inter = F.size(F.array_intersect(sa, sb)).cast("double")
-    # |A ∪ B| = |A| + |B| − |A ∩ B| exactly (both sides are
-    # array_distinct'd, no NULL elements) — the array_union hash-set
-    # build per pair was a second full set pass for a number two
-    # size() calls derive from the intersect already computed
-    # (project-level CSE folds the duplicated intersect subtree).
+    # |A ∪ B| = |A| + |B| − |A ∩ B| exactly: both sides are
+    # array_distinct'd and a shingle array never holds a NULL element.
+    # The array_union hash-set build per pair was a second full set
+    # pass for a number two size() calls derive from the intersect
+    # already computed (project-level CSE folds the duplicated
+    # intersect subtree). Null text shingles to NULL, and size(NULL) is
+    # NULL under the session's ANSI mode (with ANSI off it is -1 and
+    # the two forms diverge), so a pair with a null text has a NULL
+    # jaccard, as under array_union; empty text shingles to [""], so
+    # empty vs empty is 1.0 and empty vs non-empty 0.0
+    # (tests/test_dedup_similarity.py pins these cases).
     union = (F.size(sa) + F.size(sb)).cast("double") - inter
     adjacent = j.select(
         F.lit("adjacent").alias("part"),
@@ -3735,7 +3509,7 @@ def _recall_guarded(out, floor: float):
     return base.unionByName(alerts)
 
 
-def q_ann_lsh_topk(spark, sf, modes=("lsh", "ham")):
+def q_ann_lsh_topk(spark, sf):
     """Approximate top-k via random-hyperplane LSH buckets. 4 planes ×
     12 tables: measured recall@5 vs exact cosine is 0.78-0.90 on the
     64-dim test embeddings (6×4 scored only 0.33 — collision
@@ -3761,51 +3535,39 @@ def q_ann_lsh_topk(spark, sf, modes=("lsh", "ham")):
     measured 0.775 on these worst-case near-random embeddings)."""
     from ..operators.similarity import binary_hamming_topk
 
-    modes = set(modes)
     e = _t(spark, sf, "embeddings")
     q = e.where(F.col("vec_id") < 8)
     exact = cosine_topk(e, q, k=5)
-    legs = []
-    if "lsh" in modes:
-        # dim=64 pinned here too — same construction-time probe skip
-        approx = ann_lsh_topk(e, q, k=5, n_planes=4, n_tables=12, dim=64)
-        out = ann_recall_vs_exact(approx, exact, k=5)
-        legs.append(out.select(
-            F.lit("lsh").alias("mode"),
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-            F.round("recall_at_k", 6).alias("recall_at_k"),
-            (F.col("recall_at_k") >= 0.4).alias("recall_ok"),
-        ))
-    if "ham" in modes:
-        # dim=64 pinned: the default dim probe is a .first() driver job
-        # at query construction (fine for ad-hoc use, waste here)
-        hout = ann_recall_vs_exact(
-            binary_hamming_topk(e, q, k=5, dim=64).drop("hamming"), exact, k=5
-        )
-        legs.append(hout.select(
-            F.lit("ham").alias("mode"),
-            "query_id",
-            "neighbor_id",
-            F.col("cosine"),  # binary_hamming_topk already ROUNDs to 6
-            "rank",
-            F.round("recall_at_k", 6).alias("recall_at_k"),
-            (F.col("recall_at_k") >= 0.6).alias("recall_ok"),
-        ))
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    # dim=64 pinned on both legs: the default dim probe is a .first()
+    # driver job at query construction (fine for ad-hoc use, waste here)
+    approx = ann_lsh_topk(e, q, k=5, n_planes=4, n_tables=12, dim=64)
+    lsh = ann_recall_vs_exact(approx, exact, k=5).select(
+        F.lit("lsh").alias("mode"),
+        "query_id",
+        "neighbor_id",
+        F.round("cosine", 6).alias("cosine"),
+        "rank",
+        F.round("recall_at_k", 6).alias("recall_at_k"),
+        (F.col("recall_at_k") >= 0.4).alias("recall_ok"),
+    )
+    hout = ann_recall_vs_exact(
+        binary_hamming_topk(e, q, k=5, dim=64).drop("hamming"), exact, k=5
+    )
+    return lsh.unionByName(hout.select(
+        F.lit("ham").alias("mode"),
+        "query_id",
+        "neighbor_id",
+        F.col("cosine"),  # binary_hamming_topk already ROUNDs to 6
+        "rank",
+        F.round("recall_at_k", 6).alias("recall_at_k"),
+        (F.col("recall_at_k") >= 0.6).alias("recall_ok"),
+    ))
 
 
-def q_ann_ivf_topk(spark, sf, modes=("ivf", "ivfpq", "ivfstore")):
+def q_ann_ivf_topk(spark, sf):
     """The coarse-quantizer ANN index family as ONE tagged union
     (registry-folding pattern), each branch with a count-visible
-    quality guard (``modes`` restricts the branches BUILT — the bench
-    part builders use it so the eager store/checkpoint work of one
-    branch is never charged to another's timing):
+    quality guard:
 
     - ``ivf``: IVF inverted-list top-k with per-query
       ``recall_at_k``/``recall_ok`` vs exact cosine top-k
@@ -3835,11 +3597,7 @@ def q_ann_ivf_topk(spark, sf, modes=("ivf", "ivfpq", "ivfstore")):
     oracle UNROLLS the Lloyd's iteration, and the store leg's
     agreement bit is pinned to ``true`` — so a store-layout bug, a
     recall collapse, OR quantization drift is now a hash mismatch."""
-    from ..operators.similarity import (
-        _unit_vec,
-        ann_ivfpq_topk,
-        train_pq_codebooks,
-    )
+    from ..operators.similarity import _unit_vec
 
     e = _t(spark, sf, "embeddings")
     q = e.where(F.col("vec_id") < 8)
@@ -3854,46 +3612,28 @@ def q_ann_ivf_topk(spark, sf, modes=("ivf", "ivfpq", "ivfstore")):
         .collect()
     )
     cents = [{"cid": r["cid"], "cent": _unit_vec(r["v"])} for r in seed16]
-    modes = set(modes)
-    legs = []
     approx = ann_ivf_topk(e, q, k=5, n_centroids=16, n_probe=4, centroids=cents)
     # round 16 (optimization): after the one shared seed collect the
     # three branches are independent until the final union — the PQ
     # training collects, the store write, and the in-memory leg's
     # expression building overlap on the build pool (guide §2.6);
     # union order (ivf, ivfpq, ivfstore) is preserved
-    fut_pq = (
-        _bg_submit(_ann_ivfpq_leg, e, q, seed16, cents)
-        if "ivfpq" in modes
-        else None
+    fut_pq = _bg_submit(_ann_ivfpq_leg, e, q, seed16, cents)
+    fut_store = _bg_submit(_ann_ivfstore_leg, e, q, approx, cents)
+    ivf = _recall_guarded(
+        ann_recall_vs_exact(approx, cosine_topk(e, q, k=5), k=5), floor=0.6
+    ).select(
+        F.lit("ivf").alias("mode"),
+        "query_id",
+        "neighbor_id",
+        F.round("cosine", 6).alias("cosine"),
+        F.lit(None).cast("double").alias("adc_dist"),
+        F.col("rank").cast("long").alias("rank"),
+        "recall_at_k",
+        "recall_ok",
     )
-    fut_store = (
-        _bg_submit(_ann_ivfstore_leg, e, q, approx, cents)
-        if "ivfstore" in modes
-        else None
-    )
-    if "ivf" in modes:
-        ivf = _recall_guarded(
-            ann_recall_vs_exact(approx, cosine_topk(e, q, k=5), k=5), floor=0.6
-        ).select(
-            F.lit("ivf").alias("mode"),
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.lit(None).cast("double").alias("adc_dist"),
-            F.col("rank").cast("long").alias("rank"),
-            "recall_at_k",
-            "recall_ok",
-        )
-        legs.append(ivf)
-    if fut_pq is not None:
-        legs.append(fut_pq.result())
-    if fut_store is not None:
-        legs.append(fut_store.result())
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    pq, store = fut_pq.result(), fut_store.result()
+    return ivf.unionByName(pq).unionByName(store)
 
 
 def _ann_ivfpq_leg(e, q, seed16, cents):
@@ -4247,7 +3987,7 @@ def _vtrim_synth_payload(i: int) -> bytes:
     return avi_encode(8, 8, frames, fps=8)
 
 
-def q_multimodal_features(spark, sf, parts=("feat", "phash", "vdup", "vtrim")):
+def q_multimodal_features(spark, sf):
     """Multimodal pipeline over REAL codecs, as ONE tagged union
     (registry-folding pattern).
 
@@ -4296,6 +4036,7 @@ def q_multimodal_features(spark, sf, parts=("feat", "phash", "vdup", "vtrim")):
         dhash_of_payload,
         hamming_neardup_pairs,
         image_dhash,
+        media_hashes,
         rot_min_dhash_of_payload,
         spechash_of_payload,
         vhash_of_payload,
@@ -4303,144 +4044,134 @@ def q_multimodal_features(spark, sf, parts=("feat", "phash", "vdup", "vtrim")):
     )
     from ..operators.multimodal import probe_media_metadata
 
-    parts = set(parts)
-    legs = []
     _pair_futs = []
     _null = lambda t: F.lit(None).cast(t)  # noqa: E731
-    if "feat" in parts:
-        d = _t(spark, sf, "documents").where(F.col("doc_id") < 200).select("doc_id")
+    d = _t(spark, sf, "documents").where(F.col("doc_id") < 200).select("doc_id")
 
-        def _synth(batches):
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["content"] = [
-                    _mm_synth_payload(int(did)) for did in pdf["doc_id"]
-                ]
-                yield pdf
+    def _synth(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["content"] = [
+                _mm_synth_payload(int(did)) for did in pdf["doc_id"]
+            ]
+            yield pdf
 
-        media = d.mapInPandas(_synth, schema="doc_id long, content binary")
-        media = attach_media_metadata(media, media_type="unknown", fmt="bin")
-        media = probe_media_metadata(media)
-        # features + provenance + both perceptual hashes in ONE Arrow
-        # pass — payloads decode once, not once per hash family
-        out = extract_media_features(
-            media,
-            n_features=8,
-            # the WHOLE perceptual family in the one decode pass —
-            # round 10 adds ahash so every hash column is driver-
-            # oracled, not just dhash/wavhash
-            hash_columns={
-                "dhash": dhash_of_payload,
-                "ahash": ahash_of_payload,
-                "wavhash": wavhash_of_payload,
-                # round 11: rotation-canonical dHash (min over the four
-                # right-angle rotations) — catches UNTAGGED rotated
-                # re-uploads the EXIF normalization can't see
-                "rothash": rot_min_dhash_of_payload,
-                # round 11: the video + spectral-audio members — frame-
-                # majority dHash over the AVI/GIF sampled frames, and
-                # the Haitsma-Kalker gain-invariant audio fingerprint;
-                # video rows fill vhash (dhash NULL), WAVs fill
-                # wavhash+spechash
-                "vhash": vhash_of_payload,
-                "spechash": spechash_of_payload,
-            },
+    media = d.mapInPandas(_synth, schema="doc_id long, content binary")
+    media = attach_media_metadata(media, media_type="unknown", fmt="bin")
+    media = probe_media_metadata(media)
+    # features + provenance + both perceptual hashes in ONE Arrow
+    # pass — payloads decode once, not once per hash family
+    out = extract_media_features(
+        media,
+        n_features=8,
+        # the WHOLE perceptual family in the one decode pass —
+        # round 10 adds ahash so every hash column is driver-
+        # oracled, not just dhash/wavhash
+        hash_columns={
+            "dhash": dhash_of_payload,
+            "ahash": ahash_of_payload,
+            "wavhash": wavhash_of_payload,
+            # round 11: rotation-canonical dHash (min over the four
+            # right-angle rotations) — catches UNTAGGED rotated
+            # re-uploads the EXIF normalization can't see
+            "rothash": rot_min_dhash_of_payload,
+            # round 11: the video + spectral-audio members — frame-
+            # majority dHash over the AVI/GIF sampled frames, and
+            # the Haitsma-Kalker gain-invariant audio fingerprint;
+            # video rows fill vhash (dhash NULL), WAVs fill
+            # wavhash+spechash
+            "vhash": vhash_of_payload,
+            "spechash": spechash_of_payload,
+        },
+    )
+    legs = [out.select(
+        F.lit("feat").alias("part"),
+        "doc_id",
+        F.col("media_meta.format").alias("fmt"),
+        F.col("media_meta.width").alias("width"),
+        F.col("media_meta.duration_ms").alias("duration_ms"),
+        F.col("media_meta.size_bytes").alias("size_bytes"),
+        # decode provenance: "bmp"/"wav"/"png" = real stdlib decode,
+        # "fake" = byte-stat fallback (indistinguishable numerically)
+        "decoder",
+        # exact float32 -> float64 widening (no rounding): the oracle
+        # embeds the identical doubles via repr(), which round-trips
+        F.element_at("features", 1).cast("double").alias("f0"),
+        F.element_at("features", 2).cast("double").alias("f1"),
+        "dhash",
+        "ahash",
+        "wavhash",
+        "rothash",
+        "vhash",
+        "spechash",
+        _null("long").alias("pair_id"),
+        _null("long").alias("hamming"),
+    )]
+    p = _t(spark, sf, "documents").where(F.col("doc_id") < 120).select("doc_id")
+
+    def _psynth(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["content"] = [
+                _phash_synth_payload(int(did)) for did in pdf["doc_id"]
+            ]
+            yield pdf
+
+    imgs = p.mapInPandas(_psynth, schema="doc_id long, content binary")
+    # round 16 (optimization): the three pair legs (phash/vdup/
+    # vtrim) each fire an eager checkpoint job inside
+    # hamming_neardup_pairs and are mutually independent — submit
+    # them to the build pool so their Arrow-synth + banded-join
+    # jobs overlap instead of serializing (guide §2.6); futures
+    # resolve below in the original union order
+    _pair_futs.append(("phash", _bg_submit(
+        lambda imgs=imgs: hamming_neardup_pairs(
+            image_dhash(imgs), "doc_id", "dhash", max_hamming=6
         )
-        legs.append(out.select(
-            F.lit("feat").alias("part"),
-            "doc_id",
-            F.col("media_meta.format").alias("fmt"),
-            F.col("media_meta.width").alias("width"),
-            F.col("media_meta.duration_ms").alias("duration_ms"),
-            F.col("media_meta.size_bytes").alias("size_bytes"),
-            # decode provenance: "bmp"/"wav"/"png" = real stdlib decode,
-            # "fake" = byte-stat fallback (indistinguishable numerically)
-            "decoder",
-            # exact float32 -> float64 widening (no rounding): the oracle
-            # embeds the identical doubles via repr(), which round-trips
-            F.element_at("features", 1).cast("double").alias("f0"),
-            F.element_at("features", 2).cast("double").alias("f1"),
-            "dhash",
-            "ahash",
-            "wavhash",
-            "rothash",
-            "vhash",
-            "spechash",
-            _null("long").alias("pair_id"),
-            _null("long").alias("hamming"),
-        ))
-    if "phash" in parts:
-        p = _t(spark, sf, "documents").where(F.col("doc_id") < 120).select("doc_id")
+    )))
+    v = _t(spark, sf, "documents").where(F.col("doc_id") < 30).select("doc_id")
 
-        def _psynth(batches):
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["content"] = [
-                    _phash_synth_payload(int(did)) for did in pdf["doc_id"]
-                ]
-                yield pdf
+    def _vsynth(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["content"] = [
+                _vdup_synth_payload(int(did)) for did in pdf["doc_id"]
+            ]
+            yield pdf
 
-        imgs = p.mapInPandas(_psynth, schema="doc_id long, content binary")
-        # round 16 (optimization): the three pair legs (phash/vdup/
-        # vtrim) each fire an eager checkpoint job inside
-        # hamming_neardup_pairs and are mutually independent — submit
-        # them to the build pool so their Arrow-synth + banded-join
-        # jobs overlap instead of serializing (guide §2.6); futures
-        # resolve below in the original union order
-        _pair_futs.append(("phash", _bg_submit(
-            lambda imgs=imgs: hamming_neardup_pairs(
-                image_dhash(imgs), "doc_id", "dhash", max_hamming=6
-            )
-        )))
-    if "vdup" in parts:
-        v = _t(spark, sf, "documents").where(F.col("doc_id") < 30).select("doc_id")
-
-        def _vsynth(batches):
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["content"] = [
-                    _vdup_synth_payload(int(did)) for did in pdf["doc_id"]
-                ]
-                yield pdf
-
-        vids = v.mapInPandas(_vsynth, schema="doc_id long, content binary")
-        from ..operators.imagehash import media_hashes
-
-        vh = media_hashes(vids, columns={"vhash": vhash_of_payload}).select(
-            "doc_id", F.col("vhash")
+    vids = v.mapInPandas(_vsynth, schema="doc_id long, content binary")
+    vh = media_hashes(vids, columns={"vhash": vhash_of_payload}).select(
+        "doc_id", F.col("vhash")
+    )
+    _pair_futs.append(("vdup", _bg_submit(
+        lambda vh=vh: hamming_neardup_pairs(
+            vh, "doc_id", "vhash", max_hamming=8
         )
-        _pair_futs.append(("vdup", _bg_submit(
-            lambda vh=vh: hamming_neardup_pairs(
-                vh, "doc_id", "vhash", max_hamming=8
-            )
-        )))
-    if "vtrim" in parts:
-        # round 12: the TRIM-robust twin of vdup — same banded join,
-        # but hashes from the even-ordinal sampler, over fixtures whose
-        # pairs exist ONLY under that mode (head-trimmed re-uploads;
-        # see _vtrim_synth_payload)
-        vt = _t(spark, sf, "documents").where(F.col("doc_id") < 20).select("doc_id")
+    )))
+    # round 12: the TRIM-robust twin of vdup — same banded join,
+    # but hashes from the even-ordinal sampler, over fixtures whose
+    # pairs exist ONLY under that mode (head-trimmed re-uploads;
+    # see _vtrim_synth_payload)
+    vt = _t(spark, sf, "documents").where(F.col("doc_id") < 20).select("doc_id")
 
-        def _vtsynth(batches):
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["content"] = [
-                    _vtrim_synth_payload(int(did)) for did in pdf["doc_id"]
-                ]
-                yield pdf
+    def _vtsynth(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["content"] = [
+                _vtrim_synth_payload(int(did)) for did in pdf["doc_id"]
+            ]
+            yield pdf
 
-        tvids = vt.mapInPandas(_vtsynth, schema="doc_id long, content binary")
-        from ..operators.imagehash import media_hashes
-
-        tvh = media_hashes(
-            tvids,
-            columns={"vhash": lambda p: vhash_of_payload(p, sample="even")},
-        ).select("doc_id", F.col("vhash"))
-        _pair_futs.append(("vtrim", _bg_submit(
-            lambda tvh=tvh: hamming_neardup_pairs(
-                tvh, "doc_id", "vhash", max_hamming=8
-            )
-        )))
+    tvids = vt.mapInPandas(_vtsynth, schema="doc_id long, content binary")
+    tvh = media_hashes(
+        tvids,
+        columns={"vhash": lambda p: vhash_of_payload(p, sample="even")},
+    ).select("doc_id", F.col("vhash"))
+    _pair_futs.append(("vtrim", _bg_submit(
+        lambda tvh=tvh: hamming_neardup_pairs(
+            tvh, "doc_id", "vhash", max_hamming=8
+        )
+    )))
     for _tag, _fut in _pair_futs:
         pairs = _fut.result()
         legs.append(pairs.select(
@@ -4468,7 +4199,7 @@ def q_multimodal_features(spark, sf, parts=("feat", "phash", "vdup", "vtrim")):
     return out
 
 
-def q_bm25_search_docs(spark, sf, parts=("bm25", "rrf", "bm25idx")):
+def q_bm25_search_docs(spark, sf):
     """Hybrid retrieval as ONE tagged union (registry-folding
     pattern). The ``bm25`` part: the first 5 documents' 8-token
     prefixes play the query set; top-10 documents per query by Okapi
@@ -4494,9 +4225,8 @@ def q_bm25_search_docs(spark, sf, parts=("bm25", "rrf", "bm25idx")):
     import shutil
     import tempfile
 
-    from ..operators.search import bm25_index_topk, bm25_topk, write_bm25_index
+    from ..operators.search import bm25_index_topk, write_bm25_index
 
-    parts = set(parts)
     # round 14: planted zh docs (doc_id % 250 == 61, base + century
     # suffix) + a zh query (query_id 100, a 12-char substring of the
     # base) exercise the char-bigram routed grain end to end: the
@@ -4525,78 +4255,40 @@ def q_bm25_search_docs(spark, sf, parts=("bm25", "rrf", "bm25idx")):
             [(100, _BM_ZH_BASE[4:16])], "query_id long, query_text string"
         )
     )
-    legs = []
     # round 16 (optimization): the persisted-index leg — store write +
-    # probe, all eager jobs — shares nothing with the in-memory bm/rrf
-    # legs until the final union; build it on a pool thread so its
-    # parquet writes overlap the main thread's construction (guide
-    # §2.6). Round 17: when the index leg is built anyway, the bm25 /
-    # rrf legs read the PROBE ranking instead of running bm25_topk —
-    # the store contract (enforced by the oracle every round: the
-    # bm25idx rows are pinned IDENTICAL to the in-memory bm25 rows)
-    # makes the probe a value-exact substitute, and the probe's
-    # partition-pruned bucket scan replaces the corpus-sized
-    # tokenize+rank checkpoint job bm25_topk paid at build (guide §2.4
-    # remove duplicated work: the corpus was tokenized once for the
-    # index AND twice more inside the pinned bm25_topk subtree).
-    fut_idx = None
-    if "bm25idx" in parts:
-        idx_root = tempfile.mkdtemp(prefix="gs_bm25idx_")
-        atexit.register(shutil.rmtree, idx_root, ignore_errors=True)
+    # probe, all eager jobs — shares nothing with the rrf leg's cosine
+    # ranking until the fuse; build it on a pool thread so its parquet
+    # writes overlap the main thread's construction (guide §2.6).
+    # Round 17: the bm25 / rrf legs read the PROBE ranking instead of
+    # running bm25_topk — the store contract (enforced by the oracle
+    # every round: the bm25idx rows are pinned IDENTICAL to the
+    # in-memory bm25 rows) makes the probe a value-exact substitute,
+    # and the probe's partition-pruned bucket scan replaces the
+    # corpus-sized tokenize+rank job bm25_topk would pay (guide §2.4
+    # remove duplicated work).
+    idx_root = tempfile.mkdtemp(prefix="gs_bm25idx_")
+    atexit.register(shutil.rmtree, idx_root, ignore_errors=True)
 
-        def _build_idx_leg():
-            write_bm25_index(d, idx_root, num_buckets=16, cjk_route=True)
-            probe = bm25_index_topk(q, idx_root, k=10)
-            if parts & {"bm25", "rrf"}:
-                # ~k x |queries| rows, >= 3 consumers (bm25 leg, rrf
-                # fuse, bm25idx leg): one tiny pin
-                probe = probe.localCheckpoint(eager=True)
-            return probe
+    def _build_idx_leg():
+        write_bm25_index(d, idx_root, num_buckets=16, cjk_route=True)
+        # ~k x |queries| rows, 3 consumers (bm25 leg, rrf fuse,
+        # bm25idx leg): one tiny pin
+        return bm25_index_topk(q, idx_root, k=10).localCheckpoint(eager=True)
 
-        fut_idx = _bg_submit(_build_idx_leg)
-    # bm feeds BOTH the bm25 leg and the fusion input; without a
-    # checkpoint Catalyst would inline the whole BM25 corpus subtree
-    # twice — the 50-row ranking is the thing to reuse, not recompute.
-    # Round 16 (optimization): the eager pin reads only d/q, and the
-    # rrf leg's cosine ranking is independent of it until the fuse —
-    # build+pin bm on the pool while the main thread constructs the
-    # cosine sub-plan (guide §2.6). Only taken when the index leg is
-    # NOT requested (bench part builders); the full query reads the
-    # probe (round 17, above).
-    bm = None
-    fut_bm = None
-    if parts & {"bm25", "rrf"} and fut_idx is None:
-        if {"bm25", "rrf"} <= parts:
-            fut_bm = _bg_submit(
-                lambda: bm25_topk(
-                    d, q, k=10, cjk_route=True
-                ).localCheckpoint(eager=True)
-            )
-        else:
-            bm = bm25_topk(d, q, k=10, cjk_route=True)
-    cos = _bm25_cos_ranking(d, q) if "rrf" in parts else None
-    probe = fut_idx.result() if fut_idx is not None else None
-    if fut_bm is not None:
-        bm = fut_bm.result()
-    if bm is None and probe is not None:
-        bm = probe
-    if "bm25" in parts:
-        legs.append(bm.select(
-            F.lit("bm25").alias("part"), "query_id", "doc_id", "score", "rank",
-            F.lit(None).cast("long").alias("n_lists"),
-        ))
-    if "rrf" in parts:
-        legs.append(_bm25_rrf_fused(bm, cos))
-    if probe is not None:
-        legs.append(probe.select(
-            F.lit("bm25idx").alias("part"), "query_id", "doc_id",
-            "score", "rank",
-            F.lit(None).cast("long").alias("n_lists"),
-        ))
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    fut_idx = _bg_submit(_build_idx_leg)
+    cos = _bm25_cos_ranking(d, q)
+    bm = fut_idx.result()
+    bm25 = bm.select(
+        F.lit("bm25").alias("part"), "query_id", "doc_id", "score", "rank",
+        F.lit(None).cast("long").alias("n_lists"),
+    )
+    rrf = _bm25_rrf_fused(bm, cos)
+    idx = bm.select(
+        F.lit("bm25idx").alias("part"), "query_id", "doc_id",
+        "score", "rank",
+        F.lit(None).cast("long").alias("n_lists"),
+    )
+    return bm25.unionByName(rrf).unionByName(idx)
 
 
 def _bm25_cos_ranking(d, q):
@@ -4650,7 +4342,7 @@ def _bm25_rrf_fused(bm, cos):
     )
 
 
-def q_hash_split_documents(spark, sf, parts=("split", "dsir")):
+def q_hash_split_documents(spark, sf):
     """Both deterministic-sampling primitives in one map-only pass
     over each document (functions/sampling.py): the train/val/test
     split by md5 key bucket, AND the DoReMi-style domain-weighted
@@ -4685,6 +4377,11 @@ def q_hash_split_documents(spark, sf, parts=("split", "dsir")):
         stratified_hash_sample_expr,
     )
     from ..operators.dedup import _spread
+    from ..operators.dsir import (
+        dsir_logweight_expr,
+        gram_bucket_histograms,
+        gumbel_key_expr,
+    )
 
     # round 16 (optimization): the gram folds (DSIR histogram map side,
     # per-row logweight, Gumbel keys) are map-only over the single-split
@@ -4692,56 +4389,44 @@ def q_hash_split_documents(spark, sf, parts=("split", "dsir")):
     # sf0.1: 4.37 -> 3.50 s median. All outputs are exact bucket
     # arithmetic / keyed windows — partition-invariant by construction.
     d = _spread(_t(spark, sf, "documents"))
-    dsir_cols = []
-    if "dsir" in parts:
-        from ..operators.dsir import (
-            dsir_logweight_expr,
-            gram_bucket_histograms,
-            gumbel_key_expr,
+    # round 16 (optimization): the dsir model chain is TWO sequential
+    # eager jobs (histogram collect, then the k-th-key TakeOrdered over
+    # the scored corpus) that read only ``d`` — independent of the
+    # split leg's construction and its select_token_budget bucket-sums
+    # job until the final select, so the whole chain builds on the
+    # pool and overlaps them (guide §2.6)
+    def _build_dsir():
+        raw_h, tgt_h = gram_bucket_histograms(d, F.col("lang") == "en")
+        logw = dsir_logweight_expr(F.col("text"), raw_h, tgt_h)
+        key = gumbel_key_expr(F.col("doc_id"), logw)
+        kth_row = (
+            d.select(key.alias("__k"))
+            .orderBy(F.desc("__k"))
+            .limit(100)
+            .agg(F.min("__k"))
+            .first()
         )
+        kth = (
+            F.lit(float(kth_row[0]))
+            if kth_row and kth_row[0] is not None
+            else None
+        )
+        bound = F.transform(
+            F.array(logw),
+            lambda L: F.struct(
+                F.round(L, 6).alias("lw"),
+                gumbel_key_expr(F.col("doc_id"), L).alias("ky"),
+            ),
+        )[0]
+        return [
+            bound["lw"].alias("dsir_logw"),
+            F.round(bound["ky"], 6).alias("dsir_key"),
+            (bound["ky"] >= kth if kth is not None else F.lit(True)).alias(
+                "dsir_keep"
+            ),
+        ]
 
-        # round 16 (optimization): the dsir model chain is TWO
-        # sequential eager jobs (histogram collect, then the k-th-key
-        # TakeOrdered over the scored corpus) that read only ``d`` —
-        # independent of the split leg's construction and its
-        # select_token_budget bucket-sums job until the final select,
-        # so the whole chain builds on the pool and overlaps them
-        # (guide §2.6)
-        def _build_dsir():
-            raw_h, tgt_h = gram_bucket_histograms(d, F.col("lang") == "en")
-            logw = dsir_logweight_expr(F.col("text"), raw_h, tgt_h)
-            key = gumbel_key_expr(F.col("doc_id"), logw)
-            kth_row = (
-                d.select(key.alias("__k"))
-                .orderBy(F.desc("__k"))
-                .limit(100)
-                .agg(F.min("__k"))
-                .first()
-            )
-            kth = (
-                F.lit(float(kth_row[0]))
-                if kth_row and kth_row[0] is not None
-                else None
-            )
-            bound = F.transform(
-                F.array(logw),
-                lambda L: F.struct(
-                    F.round(L, 6).alias("lw"),
-                    gumbel_key_expr(F.col("doc_id"), L).alias("ky"),
-                ),
-            )[0]
-            return [
-                bound["lw"].alias("dsir_logw"),
-                F.round(bound["ky"], 6).alias("dsir_key"),
-                (bound["ky"] >= kth if kth is not None else F.lit(True)).alias(
-                    "dsir_keep"
-                ),
-            ]
-
-        _fut_dsir = _bg_submit(_build_dsir)
-        if "split" not in parts:
-            return d.select("doc_id", *_fut_dsir.result())
-
+    _fut_dsir = _bg_submit(_build_dsir)
     out = hash_split(d, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
     out = weighted_domain_sample(
         out,
@@ -4768,8 +4453,7 @@ def q_hash_split_documents(spark, sf, parts=("split", "dsir")):
     # third primitive: exact-N-per-stratum eval-set membership (16 docs
     # per language, the same 16 forever) — one lang-keyed window
     srank, skeep = stratified_hash_sample_expr("doc_id", "lang", 16)
-    if "dsir" in parts:
-        dsir_cols = _fut_dsir.result()
+    dsir_cols = _fut_dsir.result()
     return out.select(
         "doc_id",
         md5_bucket_expr("doc_id").alias("bucket"),
@@ -4893,438 +4577,6 @@ QUERIES: dict[str, QueryFn] = {
 
 assert len(QUERIES) <= 50, "driver records at most 50 correctness rows"
 
-
-# ---------------------------------------------------------------------------
-# Per-part decompositions for the bench (regression ATTRIBUTION):
-# tagged-union rows time 2-3 unrelated pipelines in one number, which
-# blurs which leg regressed. Each entry maps a bench row to callables
-# computing ONE leg. For union-tagged rows the part is the full query
-# filtered on its tag literal — Catalyst folds `lit(tag) == other` to
-# false and prunes the other union branches entirely, so the timed
-# plan IS the single leg. Composition rows (joined grains) get
-# explicit single-grain builders from the same operators.
-# ---------------------------------------------------------------------------
-
-def _tag_part(name: str, col: str, val: str) -> QueryFn:
-    def f(spark, sf):
-        return QUERIES[name](spark, sf).where(F.col(col) == F.lit(val))
-
-    return f
-
-
-def _line_grain_part(grain: str) -> QueryFn:
-    def f(spark, sf):
-        from ..operators.dedup import (
-            _spread,
-            exact_substring_dedup,
-            line_dedup,
-            sentence_span_dedup,
-        )
-
-        d = _spread(_t(spark, sf, "documents"))
-        if grain == "line":
-            return line_dedup(d)
-        if grain == "span":
-            return sentence_span_dedup(d, broadcast_stats=True)
-        if grain == "substr":
-            return exact_substring_dedup(d, k=8, broadcast_stats=True)
-        if grain == "xs":
-            from ..functions.text import is_cjk_doc_expr
-
-            return exact_substring_dedup(
-                d.select("doc_id", _xs_cjk_text_expr().alias("text")),
-                k=8,
-                cjk=is_cjk_doc_expr("text"),
-                cjk_k=20,
-                broadcast_stats=True,
-            )
-        if grain == "c4":
-            from ..functions.text import c4_line_rules_expr
-
-            toks = "filter(split(lower(trim(text)), '\\\\s+'), x -> x != '')"
-            chunk_lines = (
-                f"CASE WHEN size({toks}) = 0 THEN array() ELSE "
-                f"transform(sequence(0, int(ceil(size({toks}) / 8.0)) - 1), "
-                f"i -> concat(concat_ws(' ', slice({toks}, i * 8 + 1, 8)), "
-                "CASE WHEN i % 2 = 0 THEN '.' ELSE '' END)) END"
-            )
-            synth = (
-                f"concat_ws('\\n', concat({chunk_lines}, "
-                "CASE WHEN doc_id % 17 = 0 THEN "
-                "array('click here to enable javascript now please.') "
-                "ELSE array() END, "
-                "CASE WHEN doc_id % 23 = 0 THEN "
-                "array('lorem ipsum dolor sit amet consectetur "
-                "adipiscing elit.') ELSE array() END, "
-                "CASE WHEN doc_id % 31 = 0 THEN "
-                "array('function f() { return 1; }') ELSE array() END))"
-            )
-            return d.select(
-                "doc_id", c4_line_rules_expr(F.expr(synth)).alias("__c4")
-            ).select("doc_id", "__c4.*")
-        u = F.array_distinct(F.split(F.col("text"), "\n"))
-        return d.select(
-            "doc_id",
-            F.concat_ws("\n", u).alias("text_selfdedup"),
-            F.size(u).cast("long").alias("n_lines_unique"),
-        )
-
-    return f
-
-
-def _bm25_part(which: str) -> QueryFn:
-    # parts-restricted builders (the ann_ivf modes pattern): each leg
-    # is built alone, so the index write / bm checkpoint of one leg is
-    # never charged to another's timing
-    def f(spark, sf):
-        return q_bm25_search_docs(spark, sf, parts=(which,))
-
-    return f
-
-
-# ---------------------------------------------------------------------------
-# Build-vs-probe bench attribution for the persisted index stores.
-# The bm25idx / ivfstore query legs deliberately rebuild their store
-# per run (a layout bug must break the CORRECTNESS hash), but that
-# conflates store construction with the probe in the bench parts map —
-# a probe-path regression would hide inside build noise. These part
-# builders time the two halves separately: *_build writes a FRESH
-# store each invocation (timing = construction) and caches its path;
-# *_probe reads the cached store (built untimed on a cold standalone
-# run) so its timing is the partition-pruned probe alone.
-# ---------------------------------------------------------------------------
-_BENCH_STORE_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _fresh_store_dir(prefix: str, replaces: str | None = None) -> str:
-    """New temp store root; ``replaces`` (the cache entry being
-    overwritten) is deleted NOW — bench loops rebuild stores per
-    median pass, and deferring every cleanup to atexit accumulates one
-    full on-disk store copy per iteration."""
-    import atexit
-    import shutil
-    import tempfile
-
-    if replaces:
-        shutil.rmtree(replaces, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
-
-
-def _bm25_queries(spark, sf):
-    d = _t(spark, sf, "documents")
-    return d, d.where(F.col("doc_id") < 5).select(
-        F.col("doc_id").alias("query_id"),
-        F.concat_ws(" ", F.slice(tokens_expr(F.col("text")), 1, 8)).alias(
-            "query_text"
-        ),
-    )
-
-
-def _bm25_index_build(spark, sf):
-    from ..operators.search import write_bm25_index
-
-    root = _fresh_store_dir(
-        "gs_bm25idx_bench_", replaces=_BENCH_STORE_CACHE.get(("bm25", sf))
-    )
-    d, _ = _bm25_queries(spark, sf)
-    write_bm25_index(d, root, num_buckets=16)
-    _BENCH_STORE_CACHE[("bm25", sf)] = root
-    # materialize store-derived rows (16 bucket counts) so the noop
-    # write proves the store is readable; the timing is the build
-    return spark.read.parquet(root + "/postings").groupBy("bucket").count()
-
-
-def _bm25_index_probe(spark, sf):
-    from ..operators.search import bm25_index_topk
-
-    if ("bm25", sf) not in _BENCH_STORE_CACHE:
-        _bm25_index_build(spark, sf).collect()  # cold standalone run
-    _, q = _bm25_queries(spark, sf)
-    return bm25_index_topk(q, _BENCH_STORE_CACHE[("bm25", sf)], k=10)
-
-
-def _ivf_seed_centroids(spark, sf):
-    from ..operators.similarity import _unit_vec
-
-    e = _t(spark, sf, "embeddings")
-    seed16 = (
-        e.orderBy("vec_id")
-        .limit(16)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("v"))
-        .collect()
-    )
-    return e, [{"cid": r["cid"], "cent": _unit_vec(r["v"])} for r in seed16]
-
-
-def _ivf_store_build(spark, sf):
-    from ..operators.similarity import write_ivf_store
-
-    root = _fresh_store_dir(
-        "gs_ivfstore_bench_", replaces=_BENCH_STORE_CACHE.get(("ivf", sf))
-    )
-    e, cents = _ivf_seed_centroids(spark, sf)
-    write_ivf_store(e, root, centroids=cents)
-    _BENCH_STORE_CACHE[("ivf", sf)] = root
-    return spark.read.parquet(root + "/lists").groupBy("cid").count()
-
-
-def _ivf_store_probe(spark, sf):
-    from ..operators.similarity import ann_ivf_store_topk
-
-    if ("ivf", sf) not in _BENCH_STORE_CACHE:
-        _ivf_store_build(spark, sf).collect()  # cold standalone run
-    # plain table read — _ivf_seed_centroids would run its 16-row
-    # sort+collect here and pollute exactly the probe-only timing this
-    # split exists to isolate
-    e = _t(spark, sf, "embeddings")
-    q = e.where(F.col("vec_id") < 8)
-    return ann_ivf_store_topk(
-        q, _BENCH_STORE_CACHE[("ivf", sf)], k=5, n_probe=4
-    )
-
-
-def _snapshot_upsert_part(which: str) -> QueryFn:
-    # custom builders (NOT tag filters): the scd2 leg materializes its
-    # store eagerly inside query construction, so a tag filter on the
-    # full query would charge that work to whichever leg is timed
-    def f(spark, sf):
-        o = _t(spark, sf, "orders")
-        if which == "upsert":
-            old = o.where(F.col("o_orderkey") % 3 != 0).select(
-                "o_orderkey",
-                F.col("o_totalprice").alias("total"),
-                F.lit(0).alias("src"),
-            )
-            new = o.where(F.col("o_orderkey") % 2 == 0).select(
-                "o_orderkey",
-                (F.col("o_totalprice") * 2).alias("total"),
-                F.lit(1).alias("src"),
-            )
-            return keep_last_dedup(
-                old.unionByName(new), ["o_orderkey"], [F.col("src").desc()]
-            )
-        if which == "diff":
-            old = o.where(F.col("o_orderkey") % 3 != 0).select(
-                "o_orderkey", F.col("o_totalprice").alias("total")
-            )
-            new = o.where(F.col("o_orderkey") % 2 == 0).select(
-                "o_orderkey", (F.col("o_totalprice") * 2).alias("total")
-            )
-            return snapshot_diff(
-                old, new, pk="o_orderkey", compare_cols=["total"]
-            )
-        return QUERIES["snapshot_upsert"](spark, sf).where(
-            F.col("part") == F.lit("scd2")
-        )
-
-    return f
-
-
-def _dedup_exact_docs_part(which: str) -> QueryFn:
-    def f(spark, sf):
-        from ..operators.dedup import _spread
-
-        d = _spread(_t(spark, sf, "documents"))
-        if which == "winnow":
-            return d.select(
-                "doc_id",
-                F.size(winnow_fingerprints_expr("text")).cast("long").alias(
-                    "n_winnow_fps"
-                ),
-            )
-        return dedup_exact(d).select(
-            "doc_id", fingerprint_expr("text").alias("fp")
-        )
-
-    return f
-
-
-def _dedup_incr_part(stage: str) -> QueryFn:
-    """Marginal-cost builders for the dedup_incremental_docs bench
-    attribution (CUMULATIVE, not disjoint — each stage's own pipeline
-    from scratch, the curation-stages shape): ``sigfold`` is the
-    per-row HOF signature fold over the ingest batch alone, ``within``
-    the batch-internal LSH+verify dedup, ``cross`` the full
-    incremental run against a freshly signed store. Subtracting
-    adjacent parts bounds each stage's marginal cost; the driver query
-    itself stays the oracle surface."""
-
-    def run(spark, sf):
-        from ..operators.dedup import (
-            dedup_minhash,
-            dedup_minhash_incremental,
-            minhash_signatures,
-        )
-
-        d = _t(spark, sf, "documents")
-        batch = d.where(F.col("doc_id") % 3 != 0).select("doc_id", "text")
-        if stage == "sigfold":
-            return minhash_signatures(batch)
-        if stage == "within":
-            return dedup_minhash(batch, threshold=0.7)
-        store_sigs = minhash_signatures(
-            d.where(F.col("doc_id") % 3 == 0).select("doc_id", "text")
-        )
-        survivors, _sigs = dedup_minhash_incremental(
-            batch, store_sigs, threshold=0.7
-        )
-        return survivors
-
-    return run
-
-
-QUERY_PARTS: dict[str, dict[str, QueryFn]] = {
-    "dedup_incremental_docs": {
-        p: _dedup_incr_part(p) for p in ("sigfold", "within", "cross")
-    },
-    "lang_scores": {
-        # mode-restricted builders (the ann_ivf precedent): the clf
-        # leg charges its own training jobs to itself
-        "lang": lambda spark, sf: q_lang_scores(spark, sf, parts=("lang",)),
-        "clf": lambda spark, sf: q_lang_scores(spark, sf, parts=("clf",)),
-    },
-    "sessionize_events": {
-        p: _tag_part("sessionize_events", "part", p)
-        for p in ("sess", "funnel", "retention", "gapfill", "anomaly", "debounce")
-    },
-    "stats_agg_orders": {
-        p: _tag_part("stats_agg_orders", "part", p)
-        for p in ("stats", "topk", "dq")
-    },
-    "json_extract_agg": {
-        p: _tag_part("json_extract_agg", "part", p) for p in ("agg", "encode")
-    },
-    "embedding_cosine_topk": {
-        p: _tag_part("embedding_cosine_topk", "part", p)
-        for p in ("emb", "hashedtf", "hardneg")
-    },
-    "ann_ivf_topk": {
-        # mode-restricted builders, NOT tag filters: the ivfstore leg
-        # writes a real store and ivfpq checkpoints eagerly at query
-        # construction — a tag filter would charge that work to
-        # whichever leg is timed (the scd2 precedent). The store leg
-        # additionally splits into build/probe halves (dict order puts
-        # build first, so probe reads the cached store).
-        **{
-            p: (lambda mode: (lambda spark, sf: q_ann_ivf_topk(spark, sf, modes=(mode,))))(p)
-            for p in ("ivf", "ivfpq")
-        },
-        "ivfstore_build": _ivf_store_build,
-        "ivfstore_probe": _ivf_store_probe,
-    },
-    "line_dedup_docs": {
-        p: _line_grain_part(p)
-        for p in ("line", "selfdedup", "span", "substr", "xs", "c4")
-    },
-    "dedup_exact_docs": {
-        p: _dedup_exact_docs_part(p) for p in ("dedup", "winnow")
-    },
-    "snapshot_upsert": {
-        p: _snapshot_upsert_part(p) for p in ("upsert", "scd2", "diff")
-    },
-    "bm25_search_docs": {
-        # custom builders: the full query checkpoints the BM25 ranking
-        # eagerly at construction, so a tag filter would charge that to
-        # whichever leg is timed. The index leg splits into build/probe
-        # halves (dict order puts build first; probe reads the cache).
-        **{p: _bm25_part(p) for p in ("bm25", "rrf")},
-        "bm25idx_build": _bm25_index_build,
-        "bm25idx_probe": _bm25_index_probe,
-    },
-    "approx_distinct_users": {
-        p: _tag_part("approx_distinct_users", "part", p)
-        for p in ("sketch", "auc", "auc_lang", "overlap")
-    },
-    # part-restricted builders (the q_lang_scores pattern), NOT
-    # _tag_part: the rank leg runs its PageRank eagerly at query
-    # construction, and a filter-after-build would charge that cost to
-    # every other part's attribution number
-    "top_terms": {
-        p: (
-            lambda part: (
-                lambda spark, sf: q_top_terms(spark, sf, parts=(part,))
-            )
-        )(p)
-        for p in ("term", "doclp", "pmi", "heavy", "doclp2", "doclp3",
-                  "rank")
-    },
-    "ngram_jaccard_adjacent": {
-        p: _tag_part("ngram_jaccard_adjacent", "part", p)
-        for p in ("adjacent", "ppjoin")
-    },
-    "ann_lsh_topk": {
-        # mode-restricted builders: the lsh leg checkpoints its
-        # candidate set eagerly at construction
-        p: (
-            lambda mode: (
-                lambda spark, sf: q_ann_lsh_topk(spark, sf, modes=(mode,))
-            )
-        )(p)
-        for p in ("lsh", "ham")
-    },
-    "multimodal_features": {
-        # mode-restricted builders: the phash leg eagerly checkpoints
-        # its pair set at construction (hamming_neardup_pairs), which
-        # a tag filter would charge to whichever leg is timed
-        p: (
-            lambda mode: (
-                lambda spark, sf: q_multimodal_features(
-                    spark, sf, parts=(mode,)
-                )
-            )
-        )(p)
-        for p in ("feat", "phash", "vdup", "vtrim")
-    },
-    "hash_split_documents": {
-        # mode-restricted builders (the ann_ivf precedent): the dsir
-        # leg runs eager histogram + threshold jobs at construction,
-        # which a tag filter would charge to whichever leg is timed
-        p: (
-            lambda mode: (
-                lambda spark, sf: q_hash_split_documents(
-                    spark, sf, parts=(mode,)
-                )
-            )
-        )(p)
-        for p in ("split", "dsir")
-    },
-    "text_stats": {
-        # mode-restricted builders: 'stats' = the pre-round-11 columns
-        # with NO jusText work; 'justext' = only the extraction columns
-        p: (
-            lambda mode: (
-                lambda spark, sf: q_text_stats(spark, sf, parts=(mode,))
-            )
-        )(p)
-        for p in ("stats", "justext")
-    },
-    "curation_pipeline_docs": {
-        # stage-restricted builders: each times ONE stage's marginal
-        # pipeline over the base scan (the full query composes them
-        # behind shared projections, so tag filters can't attribute it)
-        p: (
-            lambda st: (
-                lambda spark, sf: q_curation_pipeline_docs(
-                    spark, sf, stages=(st,)
-                )
-            )
-        )(p)
-        for p in (
-            "url",
-            "blocklist",
-            "robots",
-            "license",
-            "dup",
-            "gopher",
-            "quality",
-            "adaptive",
-            "contam",
-            "logprob",
-        )
-    },
-}
 
 _SW = "[" + ", ".join(f"'{w}'" for w in STOPWORDS_EN) + "]"
 _TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"

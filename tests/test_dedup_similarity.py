@@ -95,6 +95,40 @@ def test_ngram_jaccard_verification(docs):
     assert (1, 5) not in got
 
 
+def test_adjacent_jaccard_null_and_empty_text(spark, tmp_path):
+    """ngram_jaccard_adjacent's null/empty contract: a pair with a NULL
+    text has a NULL jaccard (its shingle array is NULL, and so is
+    size(NULL) under ANSI mode), while empty text shingles to [""]:
+    empty vs empty is 1.0 and empty vs non-empty is 0.0. The
+    |A|+|B|-|A∩B| union gives the same answers as array_union would."""
+    from gluestick_ts_spark.plans.queries import QUERIES
+
+    rows = [
+        (1, "the quick brown fox jumps"),
+        (2, None),
+        (3, ""),
+        (4, ""),
+        (5, "the quick brown fox"),
+        (6, "the quick brown fox jumps"),
+    ]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in QUERIES["ngram_jaccard_adjacent"](spark, str(tmp_path))
+        .where(F.col("part") == "adjacent")
+        .collect()
+    }
+    assert got == {
+        (1, 2): None,  # normal vs null
+        (2, 3): None,  # null vs empty
+        (3, 4): 1.0,
+        (4, 5): 0.0,
+        (5, 6): 0.666667,  # 2 of 3 distinct 3-shingles shared
+    }
+
+
 def test_dedup_minhash_end_to_end(docs):
     out = dedup_minhash(docs, threshold=0.5)
     assert sorted(r["doc_id"] for r in out.collect()) == [1, 5]

@@ -124,15 +124,15 @@ def test_stats_part_still_shuffles_once_and_dq_scans_once(spark, sf_dir):
     of orders — exchanges after the aggregate carry a handful of
     1-row summaries, but a second 'Scan parquet' means a constraint
     bought its own corpus pass."""
-    from gluestick_ts_spark.plans.queries import QUERY_PARTS
+    from pyspark.sql import functions as F
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    stats = QUERY_PARTS["stats_agg_orders"]["stats"](spark, sf_dir)
+    stats = QUERIES["stats_agg_orders"](spark, sf_dir).where(F.col("part") == "stats")
     plan = stats._jdf.queryExecution().explainString(mode)
     assert _shuffles(plan) <= 1, _shuffles(plan)
-    dq = QUERY_PARTS["stats_agg_orders"]["dq"](spark, sf_dir)
+    dq = QUERIES["stats_agg_orders"](spark, sf_dir).where(F.col("part") == "dq")
     plan = dq._jdf.queryExecution().explainString(mode)
     scans = re.findall(r"\(\d+\) Scan parquet", plan)
     assert len(scans) <= 1, scans
@@ -374,14 +374,30 @@ def test_curation_pipeline_composes_without_new_shuffle_classes(spark, sf_dir):
     # 16: the full path checkpoints the per-doc flag relation before
     # the adaptive filter's double read, so those windows execute at
     # construction and no longer print in the final explained plan —
-    # the gate moves to the url stage builder's (lazy) plan, which is
-    # the same pipeline the full path runs pre-checkpoint.
-    from gluestick_ts_spark.plans.queries import QUERY_PARTS
+    # the gate moves to the two URL-stage operators the full path runs
+    # pre-checkpoint, over a synthetic URL column.
+    from pyspark.sql import functions as F
+
+    from gluestick_ts_spark.operators.weburl import domain_cap_flag, url_dedup_flag
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    url_df = QUERY_PARTS["curation_pipeline_docs"]["url"](spark, sf_dir)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    url_df = docs.select(
+        "doc_id",
+        F.concat(
+            F.lit("http://www.example"),
+            (F.col("doc_id") % 50).cast("string"),
+            F.lit(".org/item/"),
+            F.col("doc_id").cast("string"),
+        ).alias("__url"),
+    )
+    url_df = url_dedup_flag(url_df, "__url", "doc_id", flag_col="url_keep")
+    url_df = domain_cap_flag(
+        url_df, "__url", "doc_id", cap=25, seed=1,
+        flag_col="domain_keep", domain_col="domain",
+    ).drop("__url")
     url_hashed = [
         a
         for a in _exchange_args(
@@ -535,9 +551,18 @@ def test_snapshot_diff_leg_is_one_pk_equi_join(spark, sf_dir):
     full-outer equi-join: every hash exchange keys on the pk, the join
     is never a nested-loop/cartesian fallback, and everything after
     the join is map-only (no second aggregation shuffle)."""
-    from gluestick_ts_spark.plans.queries import QUERY_PARTS
+    from pyspark.sql import functions as F
 
-    df = QUERY_PARTS["snapshot_upsert"]["diff"](spark, sf_dir)
+    from gluestick_ts_spark.operators.cdc import snapshot_diff
+
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    old = o.where(F.col("o_orderkey") % 3 != 0).select(
+        "o_orderkey", F.col("o_totalprice").alias("total")
+    )
+    new = o.where(F.col("o_orderkey") % 2 == 0).select(
+        "o_orderkey", (F.col("o_totalprice") * 2).alias("total")
+    )
+    df = snapshot_diff(old, new, pk="o_orderkey", compare_cols=["total"])
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
@@ -555,9 +580,9 @@ def test_anomaly_leg_windows_within_key_partitions(spark, sf_dir):
     every exchange on event_type (the baseline window and the spine
     join reuse the aggregate's partitioning) and never sorts globally
     — the trailing frame orders buckets WITHIN each key's partition."""
-    from gluestick_ts_spark.plans.queries import QUERY_PARTS
+    from pyspark.sql import functions as F
 
-    df = QUERY_PARTS["sessionize_events"]["anomaly"](spark, sf_dir)
+    df = QUERIES["sessionize_events"](spark, sf_dir).where(F.col("part") == "anomaly")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
@@ -575,9 +600,11 @@ def test_overlap_leg_joins_sketches_not_raw_ids(spark, sf_dir):
     exchange keys on event_type (the sketch aggregates and their
     join), or on the exact-verification pair; user_id alone never
     becomes a join partitioning key, and the whole leg stays JVM-side."""
-    from gluestick_ts_spark.plans.queries import QUERY_PARTS
+    from pyspark.sql import functions as F
 
-    df = QUERY_PARTS["approx_distinct_users"]["overlap"](spark, sf_dir)
+    df = QUERIES["approx_distinct_users"](spark, sf_dir).where(
+        F.col("part") == "overlap"
+    )
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
@@ -595,9 +622,17 @@ def test_bigram_lm_leg_broadcasts_model_tables(spark, sf_dir):
     BroadcastHashJoins; hash exchanges key only on token/pair/doc
     keys (the count aggregates and the per-document mean), there is
     no global sort beyond TakeOrdered, and the leg stays JVM-side."""
-    from gluestick_ts_spark.plans.queries import QUERY_PARTS
+    from gluestick_ts_spark.functions.text import is_cjk_doc_expr
+    from gluestick_ts_spark.operators.profile import bigram_logprob_scores
+    from gluestick_ts_spark.plans.queries import _cjk_dd_text_expr
 
-    df = QUERY_PARTS["top_terms"]["doclp2"](spark, sf_dir)
+    d2 = spark.read.parquet(f"{sf_dir}/documents.parquet").withColumn(
+        "text", _cjk_dd_text_expr(200, 61, 161)
+    )
+    df = bigram_logprob_scores(
+        d2, vocab_size=100, bigram_size=500, min_count=2, lam=0.7,
+        cjk=is_cjk_doc_expr("text"),
+    )
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
@@ -669,9 +704,9 @@ def test_ham_leg_broadcasts_codes_and_bounds_rerank(spark, sf_dir):
     CartesianProduct), the exact re-rank rejoins vectors by id (hash
     joins), and every hash exchange keys on ids — vectors never key a
     shuffle."""
-    from gluestick_ts_spark.plans.queries import QUERY_PARTS
+    from pyspark.sql import functions as F
 
-    ham = QUERY_PARTS["ann_lsh_topk"]["ham"](spark, sf_dir)
+    ham = QUERIES["ann_lsh_topk"](spark, sf_dir).where(F.col("mode") == "ham")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
@@ -696,18 +731,16 @@ def test_ham_leg_broadcasts_codes_and_bounds_rerank(spark, sf_dir):
 def test_budget_columns_never_single_partition(spark, sf_dir):
     """hash_split_documents' budget columns (round-9 part): the global
     running token sum must ride the two-pass score-bucket scheme —
-    NO SinglePartition exchange anywhere in the split part's plan. The
+    NO SinglePartition exchange anywhere in the query's plan. The
     second half proves the gate has teeth: the naive formulation (a
     global ORDER BY window) DOES trip it."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from gluestick_ts_spark.plans.queries import QUERY_PARTS
-
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    split = QUERY_PARTS["hash_split_documents"]["split"](spark, sf_dir)
+    split = QUERIES["hash_split_documents"](spark, sf_dir)
     plan = split._jdf.queryExecution().explainString(mode)
     assert "SinglePartition" not in plan, plan[:1500]
 

@@ -19,6 +19,17 @@ def test_registry_within_driver_cap():
     assert len(QUERIES) <= 50
 
 
+def test_every_query_takes_spark_and_sf_only():
+    """Each registry entry has ONE build path: the driver contract
+    calls ``fn(spark, sf)``, so no query may grow a knob (a second
+    parameter with a default) that forks a build only some callers
+    take."""
+    import inspect
+
+    params = {n: list(inspect.signature(f).parameters) for n, f in QUERIES.items()}
+    assert {n: p for n, p in params.items() if p != ["spark", "sf"]} == {}
+
+
 def test_every_query_has_an_oracle():
     """Since r9 the oracle map is TOTAL: no rows-only residue. A new
     query without an oracle_sql entry must consciously delete this

@@ -208,6 +208,40 @@ def test_write_bm25_index_rejects_non_overwrite(spark, tmp_path):
         write_bm25_index(docs, str(tmp_path / "x"), mode="append")
 
 
+def test_write_bm25_index_write_error_does_not_wait_for_stats(
+    spark, tmp_path, monkeypatch
+):
+    """A failed postings write raises at once: it must not wait for the
+    concurrent corpus-stats job, which at scale is a full tokenize pass
+    (here it blocks until released)."""
+    import threading
+    import time
+
+    from py4j.protocol import Py4JJavaError
+
+    from gluestick_ts_spark.operators import search
+
+    release = threading.Event()
+
+    def blocked_stats(*_args, **_kwargs):
+        release.wait(timeout=60)
+        return 0, 0
+
+    monkeypatch.setattr(search, "_corpus_stats", blocked_stats)
+    # the index root is a regular FILE, so <root>/postings cannot be
+    # created (permission bits would not stop a root user)
+    root = tmp_path / "not_a_dir"
+    root.write_text("")
+    docs = spark.createDataFrame([(1, "a b"), (2, "b c")], "doc_id long, text string")
+    t0 = time.time()
+    try:
+        with pytest.raises(Py4JJavaError, match="ParentNotDirectory"):
+            search.write_bm25_index(docs, str(root), num_buckets=2)
+        assert time.time() - t0 < 20
+    finally:
+        release.set()
+
+
 _ZH_DOC = ("我们的朋友不在家里他们有很多事情和我们一起去看那个人的房子"
            "这是一个很好的地方大家都喜欢在这里住因为天气很好")
 _ZH_OTHER = ("今天的天气不太好所以我们决定留在家里看书喝茶和朋友聊天"

@@ -2,12 +2,14 @@
 
 Usage: python tools/time_leg.py <query> [query ...]
 
-Same methodology as bench.py (construct + noop write inside the timed
-region, one cold pass discarded, median of N=5 warm passes) but over
-only the named legs — the measure/fix/re-measure loop tool for
-optimization rounds (full bench runs cost ~20 min; this costs
-seconds-per-leg). Honors $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS via
-get_spark, like bench.py.
+Each name is a ``QUERIES`` key. Same methodology as bench.py (construct
++ noop write inside the timed region, one cold pass discarded, median
+of N warm passes, N = $SPARK_GRAFT_BENCH_RUNS, default 5) but over only
+the named legs, so a measure/fix/re-measure loop costs seconds per leg
+instead of a full suite. Each line reports the median total and the
+median build time (query construction, including the eager jobs a
+query fires while being built). Honors $SPARK_GRAFT_SF_DIR /
+$SPARK_GRAFT_CPUS via get_spark, like bench.py.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from gluestick_ts_spark.plans.queries import QUERIES, QUERY_PARTS
+from gluestick_ts_spark.plans.queries import QUERIES
 from gluestick_ts_spark.session import get_spark
 
 
@@ -34,12 +36,7 @@ def main() -> int:
     spark = get_spark(app_name="gluestick-ts-spark-timeleg")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        # part syntax: query.part times the QUERY_PARTS builder
-        if "." in name and name not in QUERIES:
-            q, p = name.split(".", 1)
-            fn = QUERY_PARTS[q][p]
-        else:
-            fn = QUERIES[name]
+        fn = QUERIES[name]
         samples = []
         builds = []
         for i in range(n + 1):
