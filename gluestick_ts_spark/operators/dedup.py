@@ -1445,25 +1445,13 @@ def dedup_exact_incremental_bucketed(
 def recover_store_data(
     spark, path: str, data_dir: str = _STORE_DATA_DIR
 ) -> bool:
-    """Bucketed-store twin of :func:`recover_flat_store` (round 16): a
-    ``_compact_store_data`` swap that died between its two renames
-    leaves the data dir ABSENT with the originals parked in
-    ``.pre-compact``. Unlike the flat stores this failure was LOUD
-    (readers raise on the missing path, never silently-empty), but it
-    required a manual rename to heal — this restores the parked data
-    (discarding the compaction work, never the keys) and clears a
-    stale ``.compact-tmp``. Called by the bucketed readers and by the
-    compactor itself, so a crashed compaction heals on next touch."""
-    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, rename_path
+    """Heal a ``_compact_store_data`` swap that died halfway
+    (``sources/fs.heal_dir`` on ``<path>/<data_dir>``). Called by the
+    bucketed readers and by the compactor itself, so a crashed
+    compaction heals on next touch."""
+    from ..sources.fs import heal_dir, join_uri
 
-    data = join_uri(path, data_dir)
-    pre = data + ".pre-compact"
-    recovered = False
-    if not hadoop_path_exists(spark, data) and hadoop_path_exists(spark, pre):
-        rename_path(spark, pre, data)
-        recovered = True
-    delete_path(spark, data + ".compact-tmp")
-    return recovered
+    return heal_dir(spark, join_uri(path, data_dir))
 
 
 def _compact_store_data(
@@ -1487,40 +1475,27 @@ def _compact_store_data(
     micro-batch forever.
 
     Same single-writer contract as appends: run between ingest batches,
-    not concurrently with one. The swap is two renames — atomic enough
-    on HDFS/local; on S3-style stores rename is copy+delete, so a crash
-    mid-swap can leave the store missing (the ``.pre-compact`` dir then
-    holds the original data for manual recovery).
+    not concurrently with one. The swap and its crash heal are
+    ``sources/fs.replace_dir`` / ``heal_dir``.
     """
     from pyspark.sql.types import StructType
 
-    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, rename_path
+    from ..sources.fs import delete_path, join_uri, replace_dir
 
     recover_store_data(spark, path, data_dir)  # heal a prior crash first
     if schema is None:
         meta = read_signature_store_meta(spark, path)
         schema = StructType.fromJson(meta["schema"])
     data = join_uri(path, data_dir)
-    tmp = join_uri(path, data_dir + ".compact-tmp")
-    old = join_uri(path, data_dir + ".pre-compact")
     df = spark.read.schema(schema).parquet(data)
     if transform is not None:
         df = transform(df)
-    df.repartition(part_col).write.mode("overwrite").partitionBy(
-        part_col
-    ).parquet(tmp)
-    if hadoop_path_exists(spark, old):
-        delete_path(spark, old)
-    if not rename_path(spark, data, old):
-        raise IOError(f"compact: could not move {data} aside")
-    if not rename_path(spark, tmp, data):
-        # roll back so the store stays readable
-        rename_path(spark, old, data)
-        raise IOError(f"compact: could not move {tmp} into place")
-    delete_path(spark, old)
-    markers = join_uri(path, "batches")
-    if hadoop_path_exists(spark, markers):
-        delete_path(spark, markers)
+    replace_dir(
+        spark,
+        data,
+        df.repartition(part_col).write.mode("overwrite").partitionBy(part_col).parquet,
+    )
+    delete_path(spark, join_uri(path, "batches"))
 
 
 def fingerprint_store_membership(
@@ -1595,28 +1570,15 @@ def compact_signature_store(spark, path: str) -> None:
 
 
 def recover_flat_store(spark, store_dir: str, data_name: str) -> bool:
-    """Crash recovery for ``compact_flat_store``'s rename swap: a crash
-    between ``rename(data -> .pre-compact)`` and ``rename(.compact-tmp
-    -> data)`` leaves the data path ABSENT while the pre-compaction
-    copy still exists — and a reader that treats "missing store" as
-    "empty store" would silently re-accept every previously-seen key.
-    This restores the ``.pre-compact`` dir back to the data path (the
-    compaction work is discarded, never the keys) and clears a stale
-    ``.compact-tmp``. Returns True when a recovery happened. Called by
-    the streaming store readers and by ``compact_flat_store`` itself,
-    so a crashed compaction heals on the next touch instead of
-    requiring a manual rename."""
-    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, rename_path
+    """Heal a ``compact_flat_store``/``compact_count_store`` swap that
+    died halfway (``sources/fs.heal_dir`` on the data path): a reader
+    that took the missing store for an empty one would silently
+    re-accept every previously-seen key. Returns True when data was
+    restored. Called by the streaming store readers and by the
+    compactors themselves, so a crash heals on the next touch."""
+    from ..sources.fs import heal_dir, join_uri
 
-    data_path = join_uri(store_dir, data_name)
-    pre = data_path + ".pre-compact"
-    recovered = False
-    if not hadoop_path_exists(spark, data_path) and hadoop_path_exists(spark, pre):
-        rename_path(spark, pre, data_path)
-        recovered = True
-    # a stale tmp (crash mid-write or post-recovery) is always garbage
-    delete_path(spark, data_path + ".compact-tmp")
-    return recovered
+    return heal_dir(spark, join_uri(store_dir, data_name))
 
 
 def compact_flat_store(
@@ -1641,7 +1603,7 @@ def compact_flat_store(
     via Hadoop-FS renames, then clears the stale ``batches/`` markers
     (they only ever protect the last UNCOMMITTED batch).
     """
-    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, rename_path
+    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, replace_dir
 
     recover_flat_store(spark, store_dir, data_name)  # heal a prior crash first
     data_path = join_uri(store_dir, data_name)
@@ -1653,14 +1615,7 @@ def compact_flat_store(
     out = df.dropDuplicates(key_cols)
     if num_files is not None:
         out = out.repartition(int(num_files))
-    tmp = data_path + ".compact-tmp"
-    pre = data_path + ".pre-compact"
-    delete_path(spark, tmp)
-    out.write.mode("overwrite").parquet(tmp)
-    delete_path(spark, pre)
-    rename_path(spark, data_path, pre)
-    rename_path(spark, tmp, data_path)
-    delete_path(spark, pre)
+    replace_dir(spark, data_path, out.write.mode("overwrite").parquet)
     delete_path(spark, join_uri(store_dir, "batches"))
 
 
@@ -1691,7 +1646,7 @@ def compact_count_store(
     ``.done`` marker stops a re-append from double-counting. Markers
     cost one tiny object per batch; for an ADDITIVE store that is the
     cheap side of the trade."""
-    from ..sources.fs import delete_path, hadoop_path_exists, join_uri, rename_path
+    from ..sources.fs import hadoop_path_exists, join_uri, replace_dir
 
     recover_flat_store(spark, store_dir, data_name)
     data_path = join_uri(store_dir, data_name)
@@ -1707,14 +1662,7 @@ def compact_count_store(
     )
     if num_files is not None:
         out = out.repartition(int(num_files))
-    tmp = data_path + ".compact-tmp"
-    pre = data_path + ".pre-compact"
-    delete_path(spark, tmp)
-    out.write.mode("overwrite").parquet(tmp)
-    delete_path(spark, pre)
-    rename_path(spark, data_path, pre)
-    rename_path(spark, tmp, data_path)
-    delete_path(spark, pre)
+    replace_dir(spark, data_path, out.write.mode("overwrite").parquet)
 
 
 def compact_fingerprint_store(spark, path: str) -> None:

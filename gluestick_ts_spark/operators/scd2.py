@@ -30,7 +30,7 @@ construction (the collapse step), which is the property that makes
 re-run ETL jobs safe.
 
 At 100 TB the untouched-history mass dominates: it flows through the
-anti-join untouched but is still rewritten by the atomic swap (parity
+anti-join untouched but is still rewritten by the directory swap (parity
 with ``snapshot_records``'s store contract). The scale path is to
 partition the store by ``is_current`` / ``to_date(valid_to)`` so the
 swap rewrites only the open partition — same merge algebra, different
@@ -47,8 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.fs import hadoop_path_exists, join_uri
-from .snapshot import _atomic_write
+from ..sources.fs import hadoop_path_exists, heal_dir, join_uri, replace_dir
 
 __all__ = ["scd2_upsert", "read_scd2", "scd2_asof"]
 
@@ -72,9 +71,11 @@ def _row_hash(cols: list[str]) -> Column:
 def read_scd2(
     spark: SparkSession, stream: str, snapshot_dir: str
 ) -> DataFrame | None:
-    """The full version history, or None before the first upsert."""
+    """The full version history, or None before the first upsert. A
+    missing path is healed first (``heal_dir``): a swap that died
+    halfway restores the parked history instead of reading as absent."""
     path = _scd2_path(stream, snapshot_dir)
-    if not hadoop_path_exists(spark, path):
+    if not (hadoop_path_exists(spark, path) or heal_dir(spark, path)):
         return None
     return spark.read.parquet(path)
 
@@ -134,7 +135,7 @@ def scd2_upsert(
 
     hist = read_scd2(spark, stream, snapshot_dir)
     result = _scd2_merge(hist, new_versions, pks, attrs, carry)
-    _atomic_write(result, path, use_csv=False)
+    replace_dir(spark, path, result.write.mode("overwrite").parquet)
     return spark.read.parquet(path)
 
 

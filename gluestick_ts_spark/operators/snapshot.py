@@ -20,18 +20,27 @@ Spark-first design decisions (SURVEY §7 hard parts 1-2):
   deterministic, one shuffle on the PK. ``dropDuplicates`` would keep an
   arbitrary row; never use it here.
 - **overwrite-while-reading**: Spark can't overwrite a path it is
-  scanning. Writes land in a temp dir and are atomically swapped in.
+  scanning. Every write goes through ``sources/fs.replace_dir``: the
+  new snapshot lands in ``<path>.compact-tmp``, the live one is parked
+  in ``<path>.pre-compact``, the tmp is renamed into place and the
+  parked copy deleted; both renames are checked and a failed second
+  rename is rolled back.
+- **crash heal**: a crash between the two renames leaves the snapshot
+  path missing and the old rows parked. ``read_snapshots`` (and
+  ``read_scd2``) call ``heal_dir`` only when the path is missing, so
+  the parked snapshot is restored instead of the stream being read as
+  new and every earlier row dropped; a normal read makes no extra
+  filesystem call.
 - **Scale**: the merge is a single shuffle on the PK; no driver
   collects. At 100 TB the snapshot would be bucketed by PK so the merge
-  shuffle only moves the (small) incoming batch. ``_atomic_write`` does
-  not repartition: it writes one file per partition of the frame it is
+  shuffle only moves the (small) incoming batch. The write does not
+  repartition: it writes one file per partition of the frame it is
   handed (after a merge, the AQE-coalesced PK shuffle's partitions).
 """
 
 from __future__ import annotations
 
 import logging
-import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,13 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.datetime_utils import localize_datetime
-from ..sources.fs import (
-    delete_path,
-    hadoop_path_exists,
-    join_uri,
-    make_dirs,
-    rename_path,
-)
+from ..sources.fs import hadoop_path_exists, heal_dir, join_uri, replace_dir
 
 __all__ = ["read_snapshots", "snapshot_records", "keep_last_dedup"]
 
@@ -74,11 +77,13 @@ def read_snapshots(
     Existence is resolved through the Hadoop FS (``sources/fs.py``), so
     ``snapshot_dir`` may live on any scheme Spark can read — an
     ``os.path`` check on an ``s3a://``/``hdfs://`` dir is always False
-    locally, which would silently treat every batch as the first."""
+    locally, which would silently treat every batch as the first. A
+    missing path is first healed (``heal_dir``), so a swap that died
+    halfway restores the parked snapshot instead of reading as absent."""
     pq_path, csv_path = _snapshot_paths(stream, snapshot_dir)
-    if hadoop_path_exists(spark, pq_path):
+    if hadoop_path_exists(spark, pq_path) or heal_dir(spark, pq_path):
         return spark.read.parquet(pq_path)
-    if hadoop_path_exists(spark, csv_path):
+    if hadoop_path_exists(spark, csv_path) or heal_dir(spark, csv_path):
         reader = spark.read.option("header", "true").option("inferSchema", "true")
         for k, v in csv_options.items():
             reader = reader.option(k, v)
@@ -127,50 +132,14 @@ def _coerce_to_batch_types(merged: DataFrame, batch_schema: T.StructType) -> Dat
     return merged.select(*exprs)
 
 
-def _hidden_sibling(path: str, suffix: str) -> str:
-    """Dot-prefixed sibling of ``path`` (URI-safe): hidden from Spark's
-    file listings, so a half-written temp dir can never leak into a
-    scan of the parent directory."""
-    head, _, base = path.rpartition("/")
-    return (head + "/" if head else "") + "." + base + suffix
-
-
-def _atomic_write(
-    df: DataFrame,
-    final_path: str,
-    use_csv: bool,
-) -> None:
-    """Write to a temp dir next to the target, then swap. Spark cannot
-    overwrite a path that feeds the plan being executed (SURVEY §7).
-
-    All path operations go through the Hadoop FS, so the snapshot dir
-    may live on any Spark-writable scheme. The swap is two renames —
-    atomic on HDFS/local; on object stores the connector emulates
-    rename with copy+delete, so a concurrent reader there needs the
-    usual object-store caveats (or a table format with a log).
-    """
-    spark = df.sparkSession
-    token = uuid.uuid4().hex[:8]
-    tmp = _hidden_sibling(final_path, f".tmp-{token}")
-    try:
-        writer = df.write.mode("overwrite")
-        if use_csv:
-            writer.option("header", "true").csv(tmp)
-        else:
-            writer.parquet(tmp)
-        head, _, _ = final_path.rpartition("/")
-        if head:
-            make_dirs(spark, head)
-        if hadoop_path_exists(spark, final_path):
-            old = _hidden_sibling(final_path, f".old-{token}")
-            rename_path(spark, final_path, old)
-            rename_path(spark, tmp, final_path)
-            delete_path(spark, old)
-        else:
-            rename_path(spark, tmp, final_path)
-    except Exception:
-        delete_path(spark, tmp)
-        raise
+def _write_snapshot(df: DataFrame, stream: str, snapshot_dir: str, use_csv: bool) -> None:
+    """Swap ``df`` in as the stream's snapshot (``replace_dir``)."""
+    pq_path, csv_path = _snapshot_paths(stream, snapshot_dir)
+    writer = df.write.mode("overwrite")
+    if use_csv:
+        replace_dir(df.sparkSession, csv_path, writer.option("header", "true").csv)
+    else:
+        replace_dir(df.sparkSession, pq_path, writer.parquet)
 
 
 def snapshot_records(
@@ -220,8 +189,7 @@ def snapshot_records(
     if snapshot is None and stream_data is not None:
         # First sight of the stream: the batch IS the snapshot
         # (etl-utils.ts:336-347).
-        pq_path, csv_path = _snapshot_paths(stream, snapshot_dir)
-        _atomic_write(stream_data, csv_path if use_csv else pq_path, use_csv)
+        _write_snapshot(stream_data, stream, snapshot_dir, use_csv)
         return _reread(stream_data.sparkSession, stream, snapshot_dir, use_csv, csv_options)
 
     if stream_data is None:
@@ -231,8 +199,7 @@ def snapshot_records(
         return snapshot
 
     if overwrite:
-        pq_path, csv_path = _snapshot_paths(stream, snapshot_dir)
-        _atomic_write(stream_data, csv_path if use_csv else pq_path, use_csv)
+        _write_snapshot(stream_data, stream, snapshot_dir, use_csv)
         merged = _reread(stream_data.sparkSession, stream, snapshot_dir, use_csv, csv_options)
         return stream_data if just_new else merged
 
@@ -274,8 +241,7 @@ def snapshot_records(
         order_by=[F.col(_SRC).desc(), F.col(_SEQ).desc()],
     ).drop(_SRC, _SEQ)
 
-    pq_path, csv_path = _snapshot_paths(stream, snapshot_dir)
-    _atomic_write(deduped, csv_path if use_csv else pq_path, use_csv)
+    _write_snapshot(deduped, stream, snapshot_dir, use_csv)
 
     if just_new:
         return stream_data

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.templating import build_string_format_variables, format_str_safely
-from .singer import to_singer
+from .singer import _merge_parts, to_singer
 
 __all__ = [
     "to_export",
@@ -79,15 +79,6 @@ def _stringify_complex(df: DataFrame) -> DataFrame:
     )
 
 
-def _merge_parts(tmp_dir: str, target: str, ext: str) -> None:
-    """Stream distributed part files into one target file (driver-side
-    byte copy, no row materialization)."""
-    with open(target, "w", encoding="utf-8") as out:
-        for part in sorted(glob.glob(os.path.join(tmp_dir, f"part-*{ext}")) or glob.glob(os.path.join(tmp_dir, "part-*"))):
-            with open(part, encoding="utf-8") as src:
-                shutil.copyfileobj(src, out)
-
-
 def write_parquet(df: DataFrame, path: str) -> None:
     """``writeParquet`` (``etl-utils.ts:45-47``)."""
     df.write.mode("overwrite").parquet(path)
@@ -117,12 +108,7 @@ def write_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
             .option("escape", '"')
             .csv(tmp)
         )
-        with open(path, "w", encoding="utf-8") as f:
-            f.write(",".join(out.columns) + "\n")
-        with open(path, "a", encoding="utf-8") as f:
-            for part in sorted(glob.glob(os.path.join(tmp, "part-*"))):
-                with open(part, encoding="utf-8") as src:
-                    shutil.copyfileobj(src, f)
+        _merge_parts(tmp, path, head=",".join(out.columns))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -136,7 +122,7 @@ def write_jsonl(df: DataFrame, path: str, single_file: bool = True) -> None:
     tmp = tempfile.mkdtemp(prefix="gs_jsonl_")
     try:
         df.write.mode("overwrite").json(tmp)
-        _merge_parts(tmp, path, ".json")
+        _merge_parts(tmp, path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -277,6 +277,27 @@ def gen_singer_header(
 
 # -- writer (singer.ts:283-392) ---------------------------------------------
 
+def _merge_parts(
+    tmp_dir: str,
+    target: str,
+    head: str | None = None,
+    tail: str | None = None,
+    append: bool = False,
+) -> None:
+    """Stream a distributed write's part files into one target file
+    (driver-side byte copy, no row materialization), with optional
+    ``head``/``tail`` lines around them; ``append`` adds to an existing
+    target. Shared by the single-file singer, csv and jsonl sinks."""
+    with open(target, "a" if append else "w", encoding="utf-8") as out:
+        if head is not None:
+            out.write(head + "\n")
+        for part in sorted(glob.glob(os.path.join(tmp_dir, "part-*"))):
+            with open(part, encoding="utf-8") as src:
+                shutil.copyfileobj(src, out)
+        if tail is not None:
+            out.write(tail + "\n")
+
+
 def to_singer(
     df: DataFrame,
     stream: str,
@@ -387,12 +408,6 @@ def to_singer(
     tmp = tempfile.mkdtemp(prefix="gs_singer_")
     try:
         records.write.mode("overwrite").text(tmp)
-        mode = "a" if os.path.exists(target) else "w"
-        with open(target, mode, encoding="utf-8") as out:
-            out.write(schema_msg + "\n")
-            for part in sorted(glob.glob(os.path.join(tmp, "part-*"))):
-                with open(part, encoding="utf-8") as src:
-                    shutil.copyfileobj(src, out)
-            out.write(state_msg + "\n")
+        _merge_parts(tmp, target, head=schema_msg, tail=state_msg, append=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -8,9 +8,16 @@ succeeding. These helpers resolve paths through the same Hadoop
 FileSystem layer Spark's own readers and writers use, so every scheme
 Spark can read behaves identically — the existence check and the scan
 agree on what "the store" is.
+
+Every store that rewrites itself (snapshots, SCD2 histories, the
+compacted dedup stores) swaps directories through :func:`replace_dir`
+and heals a swap that died halfway through :func:`heal_dir`, so the
+rename protocol and its crash recovery live in this one module.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -22,7 +29,8 @@ __all__ = [
     "read_text_file",
     "rename_path",
     "delete_path",
-    "make_dirs",
+    "replace_dir",
+    "heal_dir",
     "list_dir_names",
 ]
 
@@ -64,12 +72,59 @@ def delete_path(spark: SparkSession, path: str, recursive: bool = True) -> bool:
     return bool(fs.delete(hpath, recursive))
 
 
-def make_dirs(spark: SparkSession, path: str) -> bool:
-    """``mkdir -p`` through the Hadoop FS (no-op when already present).
-    Needed before a ``rename`` into a directory that may not exist yet —
-    Hadoop's rename, unlike its create, does not make parents."""
-    fs, hpath = _fs_and_path(spark, path)
-    return bool(fs.mkdirs(hpath))
+def replace_dir(spark: SparkSession, path: str, write: Callable[[str], None]) -> None:
+    """Replace the directory ``path`` with what ``write(tmp)`` writes.
+
+    Spark cannot overwrite a path that feeds the plan being executed,
+    so ``write`` lands in ``<path>.compact-tmp`` (a stale one is deleted
+    first) and two renames swap it in: the live dir moves to
+    ``<path>.pre-compact``, the tmp moves to ``path``, the parked copy
+    is deleted. Both renames are checked: when the first fails nothing
+    moved; when the second fails the parked copy is renamed back. Either
+    way the old data stays readable and ``IOError`` is raised. If
+    ``write`` raises, the tmp is removed and the error propagates.
+
+    A crash between the two renames leaves ``path`` missing and the old
+    data in ``<path>.pre-compact``; :func:`heal_dir` restores it. The
+    renames are atomic on HDFS/local; object-store connectors emulate
+    them with copy+delete, so single-writer callers only.
+    """
+    tmp, pre = path + ".compact-tmp", path + ".pre-compact"
+    delete_path(spark, tmp)
+    try:
+        write(tmp)
+        if hadoop_path_exists(spark, path):
+            delete_path(spark, pre)
+            if not rename_path(spark, path, pre):
+                raise IOError(f"replace_dir: could not move {path} aside")
+            if not rename_path(spark, tmp, path):
+                rename_path(spark, pre, path)  # roll back: old data stays live
+                raise IOError(f"replace_dir: could not move {tmp} into place")
+            delete_path(spark, pre)
+        elif not rename_path(spark, tmp, path):
+            raise IOError(f"replace_dir: could not move {tmp} into place")
+    except BaseException:
+        delete_path(spark, tmp)
+        raise
+
+
+def heal_dir(spark: SparkSession, path: str) -> bool:
+    """Undo a :func:`replace_dir` swap that died halfway: when ``path``
+    is missing but ``<path>.pre-compact`` exists, rename the parked
+    data back (the rewrite is discarded, never the rows), and delete a
+    stale ``<path>.compact-tmp``. Returns True when data was restored.
+
+    Stores call it before they would take a missing path for an empty
+    store, so "missing after a crash" is never read as "empty"; raises
+    ``IOError`` if the restore rename fails."""
+    tmp, pre = path + ".compact-tmp", path + ".pre-compact"
+    healed = False
+    if not hadoop_path_exists(spark, path) and hadoop_path_exists(spark, pre):
+        if not rename_path(spark, pre, path):
+            raise IOError(f"heal_dir: could not restore {pre} to {path}")
+        healed = True
+    delete_path(spark, tmp)
+    return healed
 
 
 def list_dir_names(spark: SparkSession, path: str) -> list[str]:

@@ -328,3 +328,31 @@ def test_stream_scd2_partitioned_defaults_to_64_buckets(spark, tmp_path):
     q2.awaitTermination(120)
     assert read_store_buckets(spark, _store_path("s", d)) == 64
 
+
+
+def test_scd2_upsert_after_half_done_swap_keeps_history(spark, tmp_path):
+    """A crash between the swap's two renames parks the history in
+    ``.pre-compact``; the next upsert restores it instead of starting
+    a new history."""
+    import os
+
+    d = str(tmp_path)
+    b1 = spark.createDataFrame(
+        [(1, "nyc", "2024-01-01 00:00:00"), (2, "sf", "2024-01-01 00:00:00")],
+        "id long, city string, ts string",
+    )
+    scd2_upsert(b1, "cust", d, pk="id", eff_ts="ts")
+    live = os.path.join(d, "cust.scd2.parquet")
+    os.rename(live, live + ".pre-compact")
+    b2 = spark.createDataFrame(
+        [(1, "berlin", "2024-02-01 00:00:00")], "id long, city string, ts string"
+    )
+    m = _hist_map(scd2_upsert(b2, "cust", d, pk="id", eff_ts="ts"))
+    assert m == {
+        1: [
+            ("2024-01-01 00:00:00", "2024-02-01 00:00:00", False, "nyc"),
+            ("2024-02-01 00:00:00", "None", True, "berlin"),
+        ],
+        2: [("2024-01-01 00:00:00", "None", True, "sf")],
+    }
+    assert sorted(os.listdir(d)) == ["cust.scd2.parquet"]

@@ -179,3 +179,20 @@ def test_partitioned_snapshot_behind_file_uri(spark, tmp_path):
     partitioned_snapshot_upsert(_df(spark, [(1, "old"), (2, "keep")]), "s", d, pk="id", n_buckets=4)
     out = partitioned_snapshot_upsert(_df(spark, [(1, "new"), (3, "add")]), "s", d, pk="id", n_buckets=4)
     assert {r["id"]: r["v"] for r in out.collect()} == {1: "new", 2: "keep", 3: "add"}
+
+
+def test_sync_after_half_done_swap_keeps_earlier_rows(spark, tmp_path):
+    """A crash between the swap's two renames leaves the snapshot path
+    missing and the old snapshot parked in ``.pre-compact``. The next
+    sync must restore it, not take the stream for new and drop every
+    earlier row."""
+    import os
+
+    d = str(tmp_path)
+    snapshot_records(_df(spark, [(1, "old"), (2, "keep")]), "s", d, pk="id")
+    live = os.path.join(d, "s.snapshot.parquet")
+    os.rename(live, live + ".pre-compact")
+    os.makedirs(live + ".compact-tmp")
+    out = snapshot_records(_df(spark, [(1, "new"), (3, "add")]), "s", d, pk="id")
+    assert {r["id"]: r["v"] for r in out.collect()} == {1: "new", 2: "keep", 3: "add"}
+    assert sorted(os.listdir(d)) == ["s.snapshot.parquet"]
