@@ -111,20 +111,22 @@ def replace_dir(spark: SparkSession, path: str, write: Callable[[str], None]) ->
 def heal_dir(spark: SparkSession, path: str) -> bool:
     """Undo a :func:`replace_dir` swap that died halfway: when ``path``
     is missing but ``<path>.pre-compact`` exists, rename the parked
-    data back (the rewrite is discarded, never the rows), and delete a
+    data back (the rewrite is discarded, never the rows) and delete the
     stale ``<path>.compact-tmp``. Returns True when data was restored.
 
-    Stores call it before they would take a missing path for an empty
-    store, so "missing after a crash" is never read as "empty"; raises
-    ``IOError`` if the restore rename fails."""
-    tmp, pre = path + ".compact-tmp", path + ".pre-compact"
-    healed = False
-    if not hadoop_path_exists(spark, path) and hadoop_path_exists(spark, pre):
-        if not rename_path(spark, pre, path):
-            raise IOError(f"heal_dir: could not restore {pre} to {path}")
-        healed = True
-    delete_path(spark, tmp)
-    return healed
+    A live ``path`` costs one existence check and is left as it is: a
+    stale tmp beside it is harmless, and the next :func:`replace_dir`
+    deletes it before writing. Stores call it before they would take a
+    missing path for an empty store, so "missing after a crash" is
+    never read as "empty"; raises ``IOError`` if the restore rename
+    fails."""
+    pre = path + ".pre-compact"
+    if hadoop_path_exists(spark, path) or not hadoop_path_exists(spark, pre):
+        return False
+    if not rename_path(spark, pre, path):
+        raise IOError(f"heal_dir: could not restore {pre} to {path}")
+    delete_path(spark, path + ".compact-tmp")
+    return True
 
 
 def list_dir_names(spark: SparkSession, path: str) -> list[str]:

@@ -2,20 +2,50 @@
 
 The reference is batch-incremental only (snapshot upsert,
 ``etl-utils.ts:258-355``); these are the streaming-native equivalents
-(SURVEY §2.2 Streaming row — stretch surface):
+(SURVEY §2.2 Streaming row), built on public Structured Streaming APIs.
+Three shapes:
 
-- ``stream_snapshot_records``: ``foreachBatch`` wrapper that applies
-  the batch snapshot-upsert to every micro-batch — exactly-once-ish
-  incremental state with the same keep-last semantics as batch mode.
-- ``stream_dedup``: watermarked ``dropDuplicates`` — late data beyond
-  the watermark is dropped, state is bounded (the scalable streaming
-  dedup story).
-- ``stream_windowed_counts``: tumbling-window aggregation with
-  watermark for late data — the canonical streaming rollup.
+- Streaming DataFrames the caller sinks: ``stream_dedup``
+  (watermarked ``dropDuplicates``), ``stream_windowed_counts``,
+  ``stream_sessionize`` (``applyInPandasWithState``),
+  ``stream_session_window_counts``, ``stream_corpus_profile``,
+  ``stream_expectations``, ``stream_drift``, and the stateless frozen-
+  model projections ``stream_semantic_contamination`` and
+  ``stream_dsir_filter`` (with ``frozen_logprob_expr``).
+- foreachBatch writers that replay by construction:
+  ``stream_snapshot_records`` and ``stream_scd2`` (the batch merge is
+  idempotent) and ``stream_rollup`` (a replay overwrites its own delta
+  directory).
+- foreachBatch screens over a durable store, which follow the replay
+  protocol below: ``stream_dedup_incremental``, ``stream_media_dedup``,
+  ``stream_url_dedup``, ``stream_domain_caps``,
+  ``stream_curation_filter`` and ``stream_semantic_dedup``.
 
-All built on public Structured Streaming APIs; at scale these run with
-checkpointing to durable storage and the same partitioning rules as
-the batch operators.
+Every writer is ``_each_batch``: empty micro-batches are skipped, the
+rest run in update mode, checkpointed when ``checkpoint_dir`` is given.
+
+THE REPLAY PROTOCOL (``_BatchStamper``). Each micro-batch gets a stamp
+scoped to its query lineage. The store is read healed (a compaction
+that died mid-swap is restored, never read as empty) and WITHOUT the
+rows carrying this batch's stamp; the results are pinned
+(``localCheckpoint``) so nothing recomputes against the mutated store;
+``emit(df, batch_id)`` runs; then the stamped rows are appended once,
+behind a ``<store_dir>/batches/<scope>-<batch>.done`` marker written
+after the append. A crash anywhere in emit → append → marker →
+checkpoint commit replays the batch against exactly the store the first
+attempt saw, so the same rows are re-emitted (at-least-once emit — give
+the sink an idempotent-by-batch_id write, the standard foreachBatch
+contract) and the store neither loses nor double-counts them. A crash
+between append and marker re-appends once: harmless for presence
+stores and reclaimed by compaction; the additive domain-count store
+collapses it on read.
+
+Stores live on any Spark-readable filesystem (file:/, hdfs:/, s3a:/):
+existence goes through the Hadoop FileSystem API, never ``os.path``.
+foreachBatch serializes micro-batches and each parquet append commits
+through the output committer, so the read-then-append cycle is safe
+for ONE writer stream per store; fan unioned sources into one stream
+instead of sharing a store.
 """
 
 from __future__ import annotations
@@ -67,33 +97,52 @@ def stream_snapshot_records(
     byte-identical for the same inputs. Caller starts the returned
     writer (``.start()``/``.trigger(availableNow=True)``).
     """
+    return _each_batch(
+        stream_df,
+        lambda batch_df, _: snapshot_records(
+            batch_df, stream, snapshot_dir, pk=pk, **snapshot_kwargs
+        ),
+        checkpoint_dir,
+    )
 
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        snapshot_records(batch_df, stream, snapshot_dir, pk=pk, **snapshot_kwargs)
 
-    writer = stream_df.writeStream.foreachBatch(_upsert).outputMode("update")
+def _each_batch(
+    stream_df: DataFrame, process, checkpoint_dir: str | None
+) -> DataStreamWriter:
+    """The writer every foreachBatch stream here returns: ``process
+    (batch_df, batch_id)`` runs on each non-empty micro-batch, in
+    update mode, checkpointed to ``checkpoint_dir`` when one is given."""
+
+    def _run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            process(batch_df, batch_id)
+
+    writer = stream_df.writeStream.foreachBatch(_run).outputMode("update")
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     return writer
 
 
-class _BatchStamper:
-    """Stable per-micro-batch identity for the shared-store replay
-    protocol. A raw foreachBatch ``batch_id`` is only unique within
-    ONE query lineage — a later query with a fresh checkpoint restarts
-    at 0, and treating its batch 0 as a replay of some earlier
-    query's batch 0 would both mis-exclude history and wrongly skip
-    the append. The stable scope is the streaming query id Spark
-    persists in the checkpoint's ``metadata`` file (identical across
-    restarts from that checkpoint — exactly the lineage whose batches
-    CAN replay); with no checkpoint there is no replay, so a fresh
-    uuid per call just guarantees uniqueness.
+def _stamped(df: DataFrame, stamp: int) -> DataFrame:
+    """``df`` with a batch stamp (``_BatchStamper.stamp``) as its
+    ``batch_id`` column — the shape every store append takes."""
+    return df.withColumn("batch_id", F.lit(int(stamp)).cast("long"))
 
-    ``stamp`` maps (scope, batch_id) to the signed-64 ``batch_id``
-    column value stored next to appended rows; ``marker`` is the
-    per-batch ``.done`` file name. The scope is resolved lazily on the
+
+class _BatchStamper:
+    """The store half of the replay protocol (module docstring): the
+    batch stamp, the store read that excludes it, and the append that
+    runs once per batch behind its ``.done`` marker.
+
+    A raw foreachBatch ``batch_id`` is only unique within ONE query
+    lineage — a later query with a fresh checkpoint restarts at 0, and
+    treating its batch 0 as a replay of some earlier query's batch 0
+    would both mis-exclude history and wrongly skip the append. The
+    stable ``scope`` is the streaming query id Spark persists in the
+    checkpoint's ``metadata`` file (identical across restarts from
+    that checkpoint — exactly the lineage whose batches CAN replay);
+    with no checkpoint there is no replay, so a fresh uuid per call
+    just guarantees uniqueness. The scope is resolved lazily on the
     first batch — the checkpoint metadata exists once the query runs.
     """
 
@@ -101,7 +150,7 @@ class _BatchStamper:
         self._ckpt = checkpoint_dir
         self._scope: str | None = None
 
-    def _resolve(self, spark) -> str:
+    def scope(self, spark) -> str:
         if self._scope is None:
             if self._ckpt:
                 import json as _json
@@ -120,37 +169,50 @@ class _BatchStamper:
         return self._scope
 
     def stamp(self, spark, batch_id: int) -> int:
+        """The signed-64 ``batch_id`` column value stored next to the
+        rows this micro-batch appends."""
         import hashlib
 
-        key = f"{self._resolve(spark)}/{int(batch_id)}"
+        key = f"{self.scope(spark)}/{int(batch_id)}"
         return int(hashlib.md5(key.encode()).hexdigest()[:15], 16)
 
-    def marker(self, spark, store_dir: str, batch_id: int) -> str:
-        from ..sources.fs import join_uri
+    def read(self, spark, path: str, batch_id: int) -> DataFrame | None:
+        """The flat store at ``path`` as this micro-batch must see it,
+        or None when there is no store. A missing path is healed first
+        (``sources/fs.heal_dir``): a compaction that died mid-swap parks
+        the rows in ``.pre-compact``, and "missing" read as "empty"
+        would re-accept every key seen before. Rows carrying this
+        batch's own stamp are excluded — on a replay they are this
+        batch's earlier append, not history. A store written before
+        the stamp column existed is read whole (it cannot tell a
+        replay); the ``batch_id`` column is kept."""
+        from ..operators.dedup import _exclude_batch_filter
+        from ..sources.fs import hadoop_path_exists, heal_dir
 
-        return join_uri(
-            store_dir,
-            "batches",
-            f"{self._resolve(spark)}-{int(batch_id)}.done",
+        if not (hadoop_path_exists(spark, path) or heal_dir(spark, path)):
+            return None
+        store = spark.read.parquet(path)
+        if "batch_id" in store.columns:
+            store = _exclude_batch_filter(
+                store, store.schema, self.stamp(spark, batch_id)
+            )
+        return store
+
+    def commit(self, spark, store_dir: str, batch_id: int, append) -> None:
+        """Run ``append(stamp)`` unless this micro-batch's append already
+        committed, then write its marker. The marker is written AFTER
+        the append, so a crash between the two re-appends on replay — a
+        harmless duplicate (reclaimed at compaction, collapsed by the
+        count store's ``(key, batch_id)`` read), never a lost or
+        double-counted verdict."""
+        from ..sources.fs import hadoop_path_exists, join_uri, write_text_file
+
+        marker = join_uri(
+            store_dir, "batches", f"{self.scope(spark)}-{int(batch_id)}.done"
         )
-
-    def already_appended(self, spark, store_dir: str, batch_id: int) -> bool:
-        """Has this micro-batch's store append already committed? The
-        marker is written AFTER the append, so a crash between the two
-        re-appends on replay — a harmless duplicate (reclaimed at
-        compaction), never a lost or double-counted verdict."""
-        from ..sources.fs import hadoop_path_exists
-
-        return hadoop_path_exists(
-            spark, self.marker(spark, store_dir, batch_id)
-        )
-
-    def mark_appended(self, spark, store_dir: str, batch_id: int) -> None:
-        from ..sources.fs import write_text_file
-
-        write_text_file(
-            spark, self.marker(spark, store_dir, batch_id), "done"
-        )
+        if not hadoop_path_exists(spark, marker):
+            append(self.stamp(spark, batch_id))
+            write_text_file(spark, marker, "done")
 
 
 def stream_dedup_incremental(
@@ -174,32 +236,7 @@ def stream_dedup_incremental(
 
     The store grows by exactly the accepted rows (~0.5 KB each at 64
     hashes); corpus text is never re-read. Caller starts the returned
-    writer.
-
-    REPLAY IDEMPOTENCY: every appended signature is stamped with its
-    micro-batch id, the dedup EXCLUDES store rows carrying the current
-    batch id, and the append is skipped when the batch's ``.done``
-    marker already exists. So a crash anywhere in the
-    emit → append → marker → checkpoint-commit sequence replays the
-    batch against exactly the store state the first attempt saw: the
-    same survivors are re-emitted (at-least-once emit — give the sink
-    an idempotent-by-batch_id write, the standard foreachBatch
-    contract), and the store converges without losing survivors OR
-    double-counting them as their own duplicates. A crash between
-    append and marker re-appends once — duplicate rows are harmless
-    for dedup (presence semantics) and reclaimed by compaction.
-
-    ``store_dir`` may live on ANY Spark-readable filesystem (file:/,
-    hdfs:/, s3a:/, ...): existence is checked through the Hadoop
-    FileSystem API, never ``os.path`` (which only sees the driver's
-    local disk and would silently dedup every batch against an empty
-    store on a remote URI). Append-atomicity contract: micro-batches
-    within one stream are serialized by foreachBatch, and each parquet
-    append commits part files through the output committer (in-flight
-    files stay under ``_temporary``), so the read-then-append cycle is
-    safe for a SINGLE writer stream per store; concurrent writer
-    streams sharing one store are not supported — fan unioned sources
-    into one stream instead.
+    writer. Replay and store contracts: the module docstring.
 
     Round 15: BOTH layouts freeze the SIGNING RECIPE (shingle grain,
     seed, num_hashes, hash family, cjk routing — ``minhash_signing``)
@@ -238,8 +275,6 @@ def stream_dedup_incremental(
     stamper = _BatchStamper(checkpoint_dir)
 
     def _process_bucketed(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         stamp = stamper.stamp(spark, batch_id)
         num_hashes = minhash_kwargs.get("num_hashes", 64)
@@ -281,21 +316,19 @@ def stream_dedup_incremental(
             cjk=cjk,
             cjk_shingle_n=cjk_shingle_n,
         )
-        # EMIT BEFORE APPEND (same ordering contract as the flat-store
-        # path): appending first would lose a crash window where the
-        # survivors live in the store but never reached the sink. Both
-        # relations are pinned first so neither recomputes against the
-        # mutated store.
         survivors = survivors.localCheckpoint(eager=True)
         sigs = sigs.localCheckpoint(eager=True)
         emit(survivors, batch_id)
-        if not stamper.already_appended(spark, store_dir, batch_id):
-            append_signature_store(
-                sigs.withColumn("batch_id", F.lit(int(stamp)).cast("long")),
+        stamper.commit(
+            spark,
+            store_dir,
+            batch_id,
+            lambda stamp: append_signature_store(
+                _stamped(sigs, stamp),
                 store_dir,
                 signing=signing,
-            )
-            stamper.mark_appended(spark, store_dir, batch_id)
+            ),
+        )
 
     def _signing_from_kwargs():
         return minhash_signing(
@@ -329,56 +362,31 @@ def stream_dedup_incremental(
         return signing
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
-        stamp = stamper.stamp(spark, batch_id)
-        # heal a crashed compaction of the flat store before the
-        # existence check (round 16 — the media/url/domain readers'
-        # contract): a compact_flat_store swap that died between its
-        # two renames parks the signatures in .pre-compact, and
-        # reading "missing" as "empty" would re-accept every
-        # previously seen near-duplicate
-        from ..operators.dedup import recover_flat_store
-
-        recover_flat_store(spark, store_dir, "signatures.parquet")
+        store = stamper.read(spark, sig_path, batch_id)
         _check_flat_signing(spark)
-        if hadoop_path_exists(spark, sig_path):
-            store = spark.read.parquet(sig_path)
-            if "batch_id" in store.columns:
-                # replay exclusion: rows this very batch appended before
-                # a crash are not "history", they are our own output.
-                # (Guarded — unlike the bucketed stores — because a flat
-                # store written before the stamp column existed is still
-                # readable; it just can't distinguish a replay.)
-                from ..operators.dedup import _exclude_batch_filter
-
-                store = _exclude_batch_filter(
-                    store, store.schema, stamp
-                ).drop("batch_id")
-        else:
+        if store is None:
             store = minhash_signatures(batch_df.limit(0), id_col, text_col)
+        else:
+            store = store.drop("batch_id")
         survivors, sigs = dedup_minhash_incremental(
             batch_df, store, id_col, text_col, threshold=threshold, **minhash_kwargs
         )
-        # Survivors must be fully materialized BEFORE the store append
-        # changes what the next read of sig_path returns.
         survivors = survivors.localCheckpoint(eager=True)
         sigs = sigs.localCheckpoint(eager=True)
         emit(survivors, batch_id)
-        if not stamper.already_appended(spark, store_dir, batch_id):
-            sigs.withColumn(
-                "batch_id", F.lit(int(stamp)).cast("long")
-            ).write.mode("append").parquet(sig_path)
-            stamper.mark_appended(spark, store_dir, batch_id)
+        stamper.commit(
+            spark,
+            store_dir,
+            batch_id,
+            lambda stamp: _stamped(sigs, stamp)
+            .write.mode("append")
+            .parquet(sig_path),
+        )
 
-    if bucketed:
-        _process = _process_bucketed
-
-    writer = stream_df.writeStream.foreachBatch(_process).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _each_batch(
+        stream_df, _process_bucketed if bucketed else _process, checkpoint_dir
+    )
 
 
 def stream_semantic_contamination(
@@ -444,11 +452,8 @@ def stream_media_dedup(
     against the store (``media_dedup_incremental``), survivors handed
     to ``emit(survivors_df, batch_id)``, and their hashes appended.
 
-    Same replay-idempotency protocol as ``stream_dedup_incremental``:
-    batch-stamped appends, current-stamp exclusion on read, ``.done``
-    markers, survivors pinned and EMITTED BEFORE the append. NULL-hash
-    rows (non-media/undecodable) always pass through and are never
-    stored.
+    Replay protocol: the module docstring. NULL-hash rows
+    (non-media/undecodable) always pass through and are never stored.
 
     Round 16: the store freezes its SIGNING RECIPE (``media_signing``
     — hash kind, grid size, and for video the frame-sampling policy)
@@ -470,7 +475,6 @@ def stream_media_dedup(
     import json
     import logging
 
-    from ..operators.dedup import _exclude_batch_filter, recover_flat_store
     from ..operators.imagehash import (
         MEDIA_SIGNING_SIDECAR,
         check_media_signing,
@@ -517,26 +521,17 @@ def stream_media_dedup(
             )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
-        stamp = stamper.stamp(spark, batch_id)
-        # a compaction that crashed mid-swap leaves the data path absent
-        # with the keys parked in .pre-compact — restore them rather
-        # than reading "empty" and re-accepting every seen hash.
-        # MUST run before the signing check: in that crash window a
-        # legacy store would otherwise look like a FRESH one and a
-        # drifted recipe would self-attest, bypassing the legacy guard
-        recover_flat_store(spark, store_dir, "hashes.parquet")
+        # the read heals a crashed compaction, so it MUST run before the
+        # signing check: in that crash window a legacy store would
+        # otherwise look like a FRESH one and a drifted recipe would
+        # self-attest, bypassing the legacy guard
+        store = stamper.read(spark, hash_path, batch_id)
         _check_store_signing(spark)
-        if hadoop_path_exists(spark, hash_path):
-            store = spark.read.parquet(hash_path)
-            if "batch_id" in store.columns:
-                store = _exclude_batch_filter(
-                    store, store.schema, stamp
-                ).drop("batch_id")
-        else:
+        if store is None:
             store = spark.createDataFrame([], "id long, hash long")
+        else:
+            store = store.drop("batch_id")
         if hash_col in batch_df.columns:
             hashed = batch_df
         else:
@@ -556,16 +551,16 @@ def stream_media_dedup(
         survivors = survivors.localCheckpoint(eager=True)
         keys = keys.localCheckpoint(eager=True)
         emit(survivors, batch_id)
-        if not stamper.already_appended(spark, store_dir, batch_id):
-            keys.withColumn(
-                "batch_id", F.lit(int(stamp)).cast("long")
-            ).write.mode("append").parquet(hash_path)
-            stamper.mark_appended(spark, store_dir, batch_id)
+        stamper.commit(
+            spark,
+            store_dir,
+            batch_id,
+            lambda stamp: _stamped(keys, stamp)
+            .write.mode("append")
+            .parquet(hash_path),
+        )
 
-    writer = stream_df.writeStream.foreachBatch(_process).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _each_batch(stream_df, _process, checkpoint_dir)
 
 
 def stream_url_dedup(
@@ -583,53 +578,39 @@ def stream_url_dedup(
     ``emit(survivors_df, batch_id)``, and their keys append so later
     batches — and later restarts — never re-accept a re-crawl.
 
-    Same replay-idempotency protocol as ``stream_dedup_incremental``:
-    every appended key is stamped with its micro-batch id, the dedup
-    EXCLUDES store rows carrying the current batch's stamp, the append
-    is skipped when the batch's ``.done`` marker exists, and survivors
-    are pinned and EMITTED BEFORE the append mutates the store. Keys
-    are ~a URL each — the store stays tiny relative to page payloads,
-    which never enter the join at all.
+    Replay protocol: the module docstring. Keys are ~a URL each — the
+    store stays tiny relative to page payloads, which never enter the
+    join at all.
     """
-    from ..operators.dedup import _exclude_batch_filter, recover_flat_store
     from ..operators.weburl import url_dedup_incremental
-    from ..sources.fs import hadoop_path_exists, join_uri
+    from ..sources.fs import join_uri
 
     url_path = join_uri(store_dir, "urls.parquet")
     stamper = _BatchStamper(checkpoint_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
-        stamp = stamper.stamp(spark, batch_id)
-        # heal a crashed compaction (see recover_flat_store) before the
-        # missing-store-means-empty branch below can misfire
-        recover_flat_store(spark, store_dir, "urls.parquet")
-        if hadoop_path_exists(spark, url_path):
-            store = spark.read.parquet(url_path)
-            if "batch_id" in store.columns:
-                store = _exclude_batch_filter(
-                    store, store.schema, stamp
-                ).drop("batch_id")
-        else:
+        store = stamper.read(spark, url_path, batch_id)
+        if store is None:
             store = spark.createDataFrame([], "url_norm string")
+        else:
+            store = store.drop("batch_id")
         survivors, keys = url_dedup_incremental(
             batch_df, store, url_col, id_col
         )
         survivors = survivors.localCheckpoint(eager=True)
         keys = keys.localCheckpoint(eager=True)
         emit(survivors, batch_id)
-        if not stamper.already_appended(spark, store_dir, batch_id):
-            keys.withColumn(
-                "batch_id", F.lit(int(stamp)).cast("long")
-            ).write.mode("append").parquet(url_path)
-            stamper.mark_appended(spark, store_dir, batch_id)
+        stamper.commit(
+            spark,
+            store_dir,
+            batch_id,
+            lambda stamp: _stamped(keys, stamp)
+            .write.mode("append")
+            .parquet(url_path),
+        )
 
-    writer = stream_df.writeStream.foreachBatch(_process).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _each_batch(stream_df, _process, checkpoint_dir)
 
 
 def stream_domain_caps(
@@ -652,13 +633,11 @@ def stream_domain_caps(
     in-batch rank <= cap``, hands survivors to ``emit(survivors_df,
     batch_id)``, and appends the survivors' per-domain counts.
 
-    Replay idempotency differs from the presence stores in ONE
-    deliberate way: counts are ADDITIVE, so a crash-window duplicate
-    append must not double-count — the store read dedups by
-    ``(domain, batch_id)`` BEFORE summing (a replayed append writes
-    byte-identical rows, which collapse), on top of the shared
-    protocol (current-stamp exclusion, ``.done`` markers,
-    emit-before-append). Maintenance: ``compact_count_store`` — NOT
+    Replay protocol: the module docstring, with ONE deliberate
+    difference from the presence stores: counts are ADDITIVE, so a
+    crash-window duplicate append must not double-count — the store
+    read dedups by ``(domain, batch_id)`` BEFORE summing (a replayed
+    append writes byte-identical rows, which collapse). Maintenance: ``compact_count_store`` — NOT
     ``compact_flat_store``, whose presence-dedup would corrupt sums.
 
     NULL-domain rows (no URL) and ''-domain rows (malformed/non-URL
@@ -670,9 +649,8 @@ def stream_domain_caps(
     grows one row per ACTIVE domain per batch and compacts to one row
     per domain — never corpus-sized."""
     from ..functions.sampling import epoch_shuffle_expr
-    from ..operators.dedup import _exclude_batch_filter, recover_flat_store
     from ..operators.weburl import with_registered_domain
-    from ..sources.fs import hadoop_path_exists, join_uri
+    from ..sources.fs import join_uri
 
     if cap < 1:
         raise ValueError(f"cap must be >= 1, got {cap}")
@@ -680,21 +658,16 @@ def stream_domain_caps(
     stamper = _BatchStamper(checkpoint_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
-        stamp = stamper.stamp(spark, batch_id)
-        recover_flat_store(spark, store_dir, "domains.parquet")
-        if hadoop_path_exists(spark, dom_path):
-            store = spark.read.parquet(dom_path)
-            store = _exclude_batch_filter(store, store.schema, stamp)
+        store = stamper.read(spark, dom_path, batch_id)
+        if store is None:
+            counts = spark.createDataFrame([], "domain string, __prior long")
+        else:
             counts = (
                 store.dropDuplicates(["domain", "batch_id"])
                 .groupBy("domain")
                 .agg(F.sum("cnt").alias("__prior"))
             )
-        else:
-            counts = spark.createDataFrame([], "domain string, __prior long")
         keyed = with_registered_domain(batch_df, url_col, "__dom")
         order_key = epoch_shuffle_expr(id_col, seed)
         w = Window.partitionBy("__dom").orderBy(order_key.asc())
@@ -714,16 +687,16 @@ def stream_domain_caps(
             .localCheckpoint(eager=True)
         )
         emit(survivors.drop("__dom", "__rank", "__prior"), batch_id)
-        if not stamper.already_appended(spark, store_dir, batch_id):
-            deltas.withColumn(
-                "batch_id", F.lit(int(stamp)).cast("long")
-            ).write.mode("append").parquet(dom_path)
-            stamper.mark_appended(spark, store_dir, batch_id)
+        stamper.commit(
+            spark,
+            store_dir,
+            batch_id,
+            lambda stamp: _stamped(deltas, stamp)
+            .write.mode("append")
+            .parquet(dom_path),
+        )
 
-    writer = stream_df.writeStream.foreachBatch(_process).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _each_batch(stream_df, _process, checkpoint_dir)
 
 
 def stream_dedup(
@@ -1082,16 +1055,8 @@ def stream_curation_filter(
     fingerprints. Run ``compact_fingerprint_store`` periodically to
     fold per-append part files.
 
-    REPLAY IDEMPOTENCY (same protocol as
-    ``stream_dedup_incremental``): appended fingerprints are stamped
-    with their micro-batch id, the membership probe EXCLUDES rows
-    carrying the current batch id, and the append is skipped when the
-    batch's ``.done`` marker exists — so a crash anywhere between
-    emit, append, marker, and checkpoint commit replays the batch
-    against the store state the first attempt saw and re-emits the
-    SAME verdicts (at-least-once emit; give the sink an
-    idempotent-by-batch_id write). Hadoop-FS paths throughout; one
-    writer stream owns a store.
+    Replay protocol: the module docstring (the membership probe is
+    the stamp-excluding store read).
     """
     from ..functions.text import (
         fingerprint_expr,
@@ -1149,8 +1114,6 @@ def stream_curation_filter(
     rank_sig_box: list = []  # computed lazily on the first batch
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         stamp = stamper.stamp(spark, batch_id)
         if not rank_sig_box:
@@ -1439,20 +1402,20 @@ def stream_curation_filter(
             F.col("__fp"),
         ).localCheckpoint(eager=True)
         emit(out.drop("__fp"), batch_id)
-        if not stamper.already_appended(spark, store_dir, batch_id):
-            append_fingerprint_store(
-                out.where(F.col("keep")).select(
-                    F.col("__fp").alias("fp"),
-                    F.lit(int(stamp)).cast("long").alias("batch_id"),
+        stamper.commit(
+            spark,
+            store_dir,
+            batch_id,
+            lambda stamp: append_fingerprint_store(
+                _stamped(
+                    out.where(F.col("keep")).select(F.col("__fp").alias("fp")),
+                    stamp,
                 ),
                 store_dir,
-            )
-            stamper.mark_appended(spark, store_dir, batch_id)
+            ),
+        )
 
-    writer = stream_df.writeStream.foreachBatch(_process).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _each_batch(stream_df, _process, checkpoint_dir)
 
 
 def stream_rollup(
@@ -1491,8 +1454,6 @@ def stream_rollup(
     stamper = _BatchStamper(checkpoint_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         write_rollup_delta(
             batch_df,
@@ -1500,7 +1461,7 @@ def stream_rollup(
             ts_col,
             keys,
             value_cols,
-            scope=stamper._resolve(spark),
+            scope=stamper.scope(spark),
             batch_no=batch_id,
             bucket=bucket,
             distinct_cols=distinct_cols,
@@ -1510,10 +1471,7 @@ def stream_rollup(
         if compact_every and batch_id % compact_every == compact_every - 1:
             compact_rollup(spark, path)
 
-    writer = stream_df.writeStream.foreachBatch(_process).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _each_batch(stream_df, _process, checkpoint_dir)
 
 
 def stream_semantic_dedup(
@@ -1536,14 +1494,7 @@ def stream_semantic_dedup(
     semantic duplicate. The first batch seeds the store and freezes
     its own first-``n_clusters`` vectors as the quantizer.
 
-    Same contracts as the other streaming stores: Hadoop-FS paths,
-    emit BEFORE append, single writer stream per store, and the
-    batch-id replay protocol — appended vectors carry their
-    micro-batch id, the store scan EXCLUDES rows with the current
-    batch id, and the append is marker-skipped on replay — so a
-    crash-replayed batch recomputes the verdict the first attempt saw
-    and re-emits the SAME survivors (at-least-once emit; give the
-    sink an idempotent-by-batch_id write).
+    Replay and store contracts: the module docstring.
     """
     from ..operators.similarity import (
         append_semantic_store,
@@ -1556,8 +1507,6 @@ def stream_semantic_dedup(
     stamper = _BatchStamper(checkpoint_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         stamp = stamper.stamp(spark, batch_id)
         if not hadoop_path_exists(spark, meta_path):
@@ -1587,19 +1536,14 @@ def stream_semantic_dedup(
         verdict = verdict.localCheckpoint(eager=True)
         kept = kept.localCheckpoint(eager=True)
         emit(verdict, batch_id)
-        if not stamper.already_appended(spark, store_dir, batch_id):
-            append_semantic_store(
-                kept.withColumn(
-                    "batch_id", F.lit(int(stamp)).cast("long")
-                ),
-                store_dir,
-            )
-            stamper.mark_appended(spark, store_dir, batch_id)
+        stamper.commit(
+            spark,
+            store_dir,
+            batch_id,
+            lambda stamp: append_semantic_store(_stamped(kept, stamp), store_dir),
+        )
 
-    writer = stream_df.writeStream.foreachBatch(_process).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _each_batch(stream_df, _process, checkpoint_dir)
 
 
 def stream_scd2(
@@ -1640,8 +1584,6 @@ def stream_scd2(
     _STREAM_DEFAULT_BUCKETS = 64
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if partitioned:
             from ..operators.scd2_partitioned import _store_path
             from ..sources.fs import hadoop_path_exists
@@ -1664,10 +1606,7 @@ def stream_scd2(
                 track_cols=track_cols,
             )
 
-    writer = stream_df.writeStream.foreachBatch(_process).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    return _each_batch(stream_df, _process, checkpoint_dir)
 
 
 def stream_session_window_counts(

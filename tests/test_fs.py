@@ -84,6 +84,18 @@ def test_heal_dir_restores_a_half_done_swap(spark, tmp_path):
     assert sorted(os.listdir(tmp_path)) == ["store.parquet"]
 
 
+def test_heal_dir_leaves_a_live_store_alone(spark, tmp_path, monkeypatch):
+    """A live path needs no heal: one existence check, no delete, even
+    with a stale tmp beside it (``replace_dir`` clears that itself)."""
+    path = _store(spark, tmp_path)
+    os.makedirs(path + ".compact-tmp")
+    deletes = []
+    monkeypatch.setattr(fs, "delete_path", lambda *a, **k: deletes.append(a))
+    assert heal_dir(spark, path) is False
+    assert deletes == []
+    assert _ids(spark, path) == [0, 1, 2]
+
+
 def test_rename_path_is_called_only_by_the_swap_and_the_rollup_pointer():
     pkg = pathlib.Path(__file__).resolve().parent.parent / "gluestick_ts_spark"
     callers = sorted(
